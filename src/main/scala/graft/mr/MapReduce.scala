@@ -1,6 +1,7 @@
 package graft.mr
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** Faithful MapReduce compatibility surface.
@@ -19,34 +20,94 @@ import org.apache.spark.sql.functions._
   *
   * Execution collapses the reference's map-per-chunk → materialized
   * double-hash shuffle → reduce → controller re-aggregation pipeline
-  * (manager.go:864-1173) into ONE Spark shuffle: `flatMap` →
+  * (manager.go:864-1173) into ONE Spark shuffle on the key: `flatMap` →
   * `groupByKey(key)` → `mapGroups(reduce)`. That is semantically the
   * `-aggregate=true` mode — globally correct counts — without the
   * duplicate-key-across-reducers quirk of the two-level file hash
   * (SURVEY §1.4.2), which we intentionally do not replicate.
   *
+  * Combiners: the reference has none — every `(word,"1")` pair crosses
+  * the shuffle (SURVEY §2.4). A registered reducer may declare a
+  * [[Combine]] form, which the default path (`numPartitions = None`)
+  * uses to shrink the map output before the key shuffle:
+  *   - [[Combine.Fold]]: the reduce equals an incremental
+  *     [[ReduceAgg]] aggregator, so the key shuffle carries one partial
+  *     buffer per key per task (wordcount, sum, max).
+  *   - [[Combine.DistinctValues]]: the reduce depends only on the SET
+  *     of values, so each map task drops the (key, value) pairs it has
+  *     already emitted ([[dropRepeats]], no extra exchange) and the same
+  *     holistic reduce renders the result (posting_list,
+  *     distinct_count). The combiner switches itself off in a task
+  *     whose pairs barely repeat, e.g. one row per unique document.
+  * Every path shuffles once on the key. Reducers without a form
+  * (concat, any caller-registered reduce) and the explicit
+  * `-reducers N` path shuffle every pair.
+  *
   * Scale note: `mapGroups` streams each group's values through an
   * iterator; the holistic `Seq[String]` signature forces buffering ONE
   * group in memory (the reference buffered the entire reduce partition,
-  * cmd/storage-node/main.go:1318-1321 — strictly worse). Incremental
-  * reducers should register as [[ReduceAgg]]-style aggregators instead;
-  * word count ships both ways and the default path uses the
-  * partial-aggregating `groupBy().count()` when asked for counts.
+  * cmd/storage-node/main.go:1318-1321 — strictly worse). A Fold reducer
+  * never buffers a group: its state is one constant-size buffer per key.
   */
 object MapReduce {
   type MapFunc = (String, String) => Seq[(String, String)]
   type ReduceFunc = (String, Seq[String]) => String
 
+  /** How the default `runJob` path may combine a reducer's input
+    * map-side. A form is a promise about the holistic reduce it rides
+    * with; MapReduceSpec pins each built-in form against its reduce. */
+  sealed trait Combine
+  object Combine {
+    /** `reduce(k, vs)` equals `agg` folded over the (k, v) pairs. */
+    final case class Fold(agg: Aggregator[(String, String), _, String]) extends Combine
+    /** `reduce(k, vs)` depends only on `vs.distinct`, in any order. */
+    case object DistinctValues extends Combine
+  }
+
+  /** The DistinctValues combiner over one map task's pairs: an
+    * in-mapper combine that drops pairs the task has already emitted,
+    * so no exchange is added. The set of seen pairs is cleared when it
+    * holds `cap` pairs, which bounds its memory. Like Hive's map-side
+    * hash aggregation it turns itself off when it does not pay: if
+    * fewer than a quarter of the first `probe` pairs repeat, the rest of
+    * the task passes through unchecked. A repeat it lets through only
+    * costs shuffle volume, as the reduce sees the set of values anyway. */
+  private[graft] def dropRepeats(pairs: Iterator[(String, String)],
+                                 probe: Int = 1 << 14,
+                                 cap: Int = 1 << 16): Iterator[(String, String)] = {
+    val seen = new java.util.HashSet[(String, String)]()
+    var checked, repeats = 0L
+    var checking = true
+    pairs.filter { kv =>
+      !checking || {
+        if (seen.size >= cap) seen.clear()
+        val fresh = seen.add(kv)
+        checked += 1
+        if (!fresh) repeats += 1
+        if (checked == probe && repeats * 4 < checked) { checking = false; seen.clear() }
+        fresh
+      }
+    }
+  }
+
   /** name → (map, reduce). Replaces the plugin registry
     * (manager.go:1815-1864) with an in-process map. */
   final class Registry {
     private val maps = scala.collection.concurrent.TrieMap.empty[String, MapFunc]
-    private val reduces = scala.collection.concurrent.TrieMap.empty[String, ReduceFunc]
+    private val reduces =
+      scala.collection.concurrent.TrieMap.empty[String, (ReduceFunc, Option[Combine])]
     def registerMap(name: String, f: MapFunc): this.type = { maps(name) = f; this }
-    def registerReduce(name: String, f: ReduceFunc): this.type = { reduces(name) = f; this }
+    // the form is stored with its reduce, so re-registering a name
+    // never leaves a stale combiner behind
+    def registerReduce(name: String, f: ReduceFunc,
+                       combine: Option[Combine] = None): this.type = {
+      reduces(name) = (f, combine); this
+    }
     def map(name: String): MapFunc =
       maps.getOrElse(name, throw new NoSuchElementException(s"map func '$name' not registered"))
-    def reduce(name: String): ReduceFunc =
+    def reduce(name: String): ReduceFunc = entry(name)._1
+    def combine(name: String): Option[Combine] = entry(name)._2
+    private def entry(name: String) =
       reduces.getOrElse(name, throw new NoSuchElementException(s"reduce func '$name' not registered"))
   }
 
@@ -59,29 +120,36 @@ object MapReduce {
       contents.split("[^\\p{L}\\p{N}]+").iterator
         .filter(_.nonEmpty).map(w => (w.toLowerCase, "1")).toSeq
     })
-    .registerReduce("wordcount", (_, values) => values.size.toString)
+    .registerReduce("wordcount", (_, values) => values.size.toString,
+      Some(Combine.Fold(ReduceAgg.countAgg)))
     // Second REGISTERED job pair proving the U3 surface generically
     // (the reference's plugin ABI supports arbitrary pairs,
     // cmd/storage-node/main.go:699,1225 — ours must too, not just
     // wordcount): a classic inverted index. map emits each token once
-    // per document with the document name as value; reduce renders the
-    // sorted distinct posting list. The reduce-side distinct guards
-    // against re-emitted postings if a caller's map skips the per-doc
-    // dedup — holistic-reduce buffering is one posting list (the ABI's
-    // documented cost; an incremental collect_set aggregator is the
-    // scale form, as with wordcount's groupBy().count() path).
+    // per input row with the row's file name as value; reduce renders
+    // the sorted distinct posting list. Under `readTextInput` a row is
+    // one LINE, so the map only dedups within a line: a token on many
+    // lines of one file is emitted once per line. The DistinctValues
+    // combiner removes most of those repeats map-side, before the
+    // shuffle (with one row per unique document there are none, and it
+    // switches off), and the reduce-side distinct makes the result
+    // independent of how the caller's rows split a document.
+    // Holistic-reduce buffering is one posting list — the ABI's
+    // documented cost.
     .registerMap("inverted_index", { (name, contents) =>
       contents.split("[^\\p{L}\\p{N}]+").iterator
         .filter(_.nonEmpty).map(_.toLowerCase).toSeq.distinct
         .map(w => (w, name))
     })
-    .registerReduce("posting_list", (_, values) => values.distinct.sorted.mkString(","))
+    .registerReduce("posting_list", (_, values) => values.distinct.sorted.mkString(","),
+      Some(Combine.DistinctValues))
     // Third registered pair (round 12): distinct-count — with the
     // inverted_index map it computes document frequency per token, the
     // df leg of TF-IDF through the faithful ABI. Holistic on one key's
     // posting list (the ABI's documented cost); the engine-native scale
     // form is approx_count_distinct / the KMV sketch family.
-    .registerReduce("distinct_count", (_, values) => values.distinct.size.toString)
+    .registerReduce("distinct_count", (_, values) => values.distinct.size.toString,
+      Some(Combine.DistinctValues))
     // the registry generalizes beyond the reference's single hardcoded
     // pair (SURVEY U4): a grep-style filtering map, identity, and
     // numeric reducers
@@ -89,16 +157,20 @@ object MapReduce {
     .registerMap("lines", { (_, contents) =>
       contents.split("\n").iterator.filter(_.nonEmpty).map(l => (l, "1")).toSeq
     })
-    .registerReduce("sum", (_, values) => values.map(_.toLong).sum.toString)
-    .registerReduce("max", (_, values) => values.map(_.toLong).max.toString)
+    .registerReduce("sum", (_, values) => values.map(_.toLong).sum.toString,
+      Some(Combine.Fold(ReduceAgg.sumAgg)))
+    .registerReduce("max", (_, values) => values.map(_.toLong).max.toString,
+      Some(Combine.Fold(ReduceAgg.maxAgg)))
     .registerReduce("concat", (_, values) => values.sorted.mkString(","))
 
-  /** Run a MapReduce job over a DataFrame of (filename, contents) rows.
+  /** Run a MapReduce job over a Dataset of (filename, contents) rows.
     *
     * Equivalent of `client mapreduce <in> <out> <map> <reduce>` with
     * `-aggregate=true` (SURVEY §3.1). Returns (key, value) sorted by key
     * — string sort, matching the reference's lexicographic output order
-    * (golden smallt_out.txt: "1, 10, 11, … 2, 20, …").
+    * (golden smallt_out.txt: "1, 10, 11, … 2, 20, …"). The default path
+    * applies the reducer's registered [[Combine]] form, if any; the
+    * result is the same with or without it.
     */
   def runJob(input: Dataset[(String, String)],
              mapId: String, reduceId: String,
@@ -114,18 +186,31 @@ object MapReduce {
       // once on the key column, then group on that same column so the
       // HashPartitioning(key, n) satisfies the aggregation's required
       // distribution — no second exchange. (groupByKey would append its
-      // own key expression and re-shuffle.)
+      // own key expression and re-shuffle.) No combiner: this path
+      // keeps the reference's every-pair shuffle (a Fold would need its
+      // own exchange below the N-way one).
       case Some(n) =>
         mapped.toDF("key", "value")
           .repartition(n, $"key")
           .groupBy($"key").agg(collect_list($"value").as("values"))
           .as[(String, Seq[String])]
           .map { case (k, vs) => (k, rf(k, vs)) }
-      // default: one shuffle sized by spark.sql.shuffle.partitions +
+      // default: key shuffle sized by spark.sql.shuffle.partitions +
       // AQE coalescing — better at scale than a fixed N.
       case None =>
-        mapped.groupByKey(_._1)
+        def holistic(kv: Dataset[(String, String)]) = kv.groupByKey(_._1)
           .mapGroups { (key, it) => (key, rf(key, it.map(_._2).toSeq)) }
+        registry.combine(reduceId) match {
+          // partial aggregate per task, then one buffer per key per
+          // task crosses the shuffle
+          case Some(Combine.Fold(agg)) =>
+            mapped.groupByKey(_._1).agg(agg.toColumn)
+              .toDF("_1", "_2").as[(String, String)]
+          // each map task drops the pairs it already emitted; the
+          // holistic reduce dedups whatever repeats across tasks
+          case Some(Combine.DistinctValues) => holistic(mapped.mapPartitions(dropRepeats(_)))
+          case None => holistic(mapped)
+        }
     }
     reduced
       .orderBy($"_1")

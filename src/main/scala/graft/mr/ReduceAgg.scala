@@ -1,10 +1,11 @@
 package graft.mr
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
-/** Incremental alternative to the holistic ReduceFunc (SURVEY §2.10 U2,
-  * §7 "generic Aggregator").
+/** Incremental forms of the holistic ReduceFunc (SURVEY §2.10 U2,
+  * §7 "generic Aggregator"), registered beside their reduce as
+  * [[MapReduce.Combine.Fold]] so `runJob` uses them automatically.
   *
   * The reference's reduce signature `(key, values) => value` forces the
   * whole value list of a group into memory (it buffered the entire
@@ -38,18 +39,9 @@ object ReduceAgg {
   val sumAgg: Aggregator[(String, String), Long, String] =
     fold[Long](0L, (b, v) => b + v.toLong, _ + _, _.toString)(Encoders.scalaLong)
 
-  /** Run a job with an incremental reducer: same contract as
-    * MapReduce.runJob but partial-aggregated. */
-  def runJobIncremental(input: Dataset[(String, String)], mapId: String,
-                        agg: Aggregator[(String, String), _, String],
-                        registry: MapReduce.Registry = MapReduce.builtins)
-      : Dataset[(String, String)] = {
-    val spark = input.sparkSession
-    import spark.implicits._
-    val mf = registry.map(mapId)
-    input.flatMap { case (name, contents) => mf(name, contents) }
-      .groupByKey(_._1)
-      .agg(agg.toColumn.name("value"))
-      .orderBy($"key")
-  }
+  /** Max of numeric string values per key. The `Long.MinValue` zero is
+    * never rendered: a group always holds at least one value. */
+  val maxAgg: Aggregator[(String, String), Long, String] =
+    fold[Long](Long.MinValue, (b, v) => math.max(b, v.toLong), math.max, _.toString)(
+      Encoders.scalaLong)
 }

@@ -350,6 +350,62 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains(", 3)"), s"expected 3-partition exchange in:\n$plan")
   }
 
+  /** The physical plan before any stage runs (AQE's initial plan). */
+  private def physical(ds: org.apache.spark.sql.Dataset[_]) = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    ds.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+  }
+
+  private def hashExchanges(p: org.apache.spark.sql.execution.SparkPlan) = {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    p.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+  }
+
+  test("runJob default wordcount combines map-side below its only hash exchange") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import spark.implicits._
+    val plan = physical(MapReduce.runJob(Seq(("f", "a b c a")).toDS(), "wordcount", "wordcount"))
+    val exchanges = hashExchanges(plan)
+    assert(exchanges.size == 1, s"expected 1 hash exchange in:\n$plan")
+    val partials = exchanges.head.child.collect {
+      case a: BaseAggregateExec
+          if a.aggregateExpressions.nonEmpty && a.aggregateExpressions.forall(_.mode == Partial) => a
+    }
+    assert(partials.nonEmpty, s"expected a partial_ aggregate below the exchange in:\n$plan")
+  }
+
+  test("runJob default posting_list drops repeated pairs map-side and shuffles once") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import spark.implicits._
+    // one map task; 5 pairs of which 3 are distinct
+    val input = spark.createDataset(spark.sparkContext.parallelize(
+      Seq(("k", "a"), ("k", "a"), ("k", "b"), ("j", "a"), ("k", "a")), 1))
+    val job = MapReduce.runJob(input, "identity", "posting_list")
+    val plan = physical(job)
+    assert(hashExchanges(plan).size == 1, s"expected 1 hash exchange in:\n$plan")
+    assert(job.collect().toSeq == Seq(("j", "a"), ("k", "a,b")))
+    // after the run, AQE's final plan holds the executed exchanges, each
+    // inside a query stage that may sit inside another stage's plan
+    def executed(p: org.apache.spark.sql.execution.SparkPlan): Seq[ShuffleExchangeExec] =
+      p.collect { case s: QueryStageExec => s.plan }.flatMap {
+        case e: ShuffleExchangeExec => e +: executed(e.child)
+        case other => executed(other)
+      }
+    val written = executed(physical(job))
+      .filter(_.outputPartitioning.isInstanceOf[HashPartitioning])
+      .map(_.metrics("shuffleRecordsWritten").value)
+    assert(written == Seq(3L), s"expected the 3 distinct pairs to cross the key shuffle, not $written")
+  }
+
   test("q1 scan prunes columns and pushes the date filter") {
     val plan = operators.Relational.q1PricingSummary(spark, sf0001)
       .queryExecution.executedPlan.toString
