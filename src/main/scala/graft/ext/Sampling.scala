@@ -570,32 +570,17 @@ object Sampling {
     * interpolation discipline), assigned by VALUE comparison against
     * the three broadcast thresholds — no global rank window, so the
     * assignment is one projection pass and identical for a row no
-    * matter which partition computes it. The quartile fetch itself is
-    * the histogram-locate path ([[graft.operators.Relational
-    * .valuesAtGroupRanks]]) — nothing sorts the corpus. */
+    * matter which partition computes it. The quartiles come from
+    * [[graft.operators.Relational.exactGroupQuantiles]] (one group,
+    * bracket-and-refine) — nothing sorts the corpus. */
   def curriculumOrder(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val tk = Tables.documents(spark, dir)
       .select(col("doc_id"),
         size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
     val vals = tk.select(lit("all").as("g"), col("n_tokens").cast("double").as("v"))
-    val counts = vals.groupBy("g").agg(count(lit(1)).as("n"))
-    val qs = counts.crossJoin(broadcast(Seq(0.25, 0.5, 0.75).toDF("q")))
-      .select(col("g"), col("q"), ((col("n") - 1) * col("q")).as("h"))
-      .select(col("g"), col("q"),
-        (floor(col("h")) + 1).cast("long").as("lo_rk"),
-        (col("h") - floor(col("h"))).as("frac"))
-      .localCheckpoint() // tiny; reused by the fetch and the join below
-    val needed = qs.select(col("g"),
-      explode(array(col("lo_rk"), col("lo_rk") + 1)).as("rk")).distinct()
-    val valueAt = graft.operators.Relational.valuesAtGroupRanks(vals, needed)
-      .localCheckpoint()
-    val thresholds = qs
-      .join(valueAt.select(col("g"), col("rk").as("lo_rk"), col("v").as("lo_v")),
-        Seq("g", "lo_rk"))
-      .join(valueAt.select(col("g"), (col("rk") - 1).as("lo_rk"), col("v").as("hi_v")),
-        Seq("g", "lo_rk"), "left")
-      .select(col("q"),
+    val thresholds = graft.operators.Relational
+      .exactGroupQuantiles(vals, Seq(0.25, 0.5, 0.75), maxGroups = 1).coalesce(1)
+      .select(col("p").as("q"),
         // unrounded interpolation in quantile_cont's exact op order —
         // the comparison below sees the identical double both engines
         // compute (the winsorize/outlier_iqr discipline)

@@ -262,9 +262,10 @@ object EventOps {
     * between a user's consecutive events, grouped by the LATER
     * event's type — the ops-dashboard latency metric. Gap derivation
     * is one window pass partitioned by user_id (high cardinality —
-    * parallelism scales with users); the exact percentiles reuse the
-    * shared bucketed-group-rank technique (no |types|-task window)
-    * with quantile_cont's exact interpolation order. */
+    * parallelism scales with users); the exact percentiles come from
+    * [[Relational.exactGroupQuantiles]] (two aggregate passes, no
+    * |types|-task window), interpolated in quantile_cont's exact op
+    * order. */
   def gapPercentiles(spark: SparkSession, dir: String): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
     val gaps = Tables.events(spark, dir)
@@ -273,26 +274,7 @@ object EventOps {
       .filter(col("prev_us").isNotNull)
       .select(col("event_type").as("g"),
         (unix_micros(col("ts")) - col("prev_us")).cast("double").as("v"))
-    val counts = gaps.groupBy("g").agg(count(lit(1)).as("n"))
-    val targets = counts
-      .select(col("g"), col("n"),
-        explode(array(lit(0.5), lit(0.95), lit(0.99))).as("p"))
-      .withColumn("h", (col("n") - 1) * col("p"))
-      .select(col("g"), col("p"),
-        (floor(col("h")) + 1).cast("long").as("lo_rk"),
-        (col("h") - floor(col("h"))).as("frac"))
-      .localCheckpoint() // tiny; reused by the fetch and both joins below
-    val needed = targets.select(col("g"),
-        explode(array(col("lo_rk"), col("lo_rk") + 1)).as("rk")).distinct()
-    val valueAt = Relational.valuesAtGroupRanks(gaps, needed)
-      // ≤ a few rows per group; eager-materialize so the two bracketing
-      // joins below don't each replay the order-statistic fetch
-      .localCheckpoint()
-    targets
-      .join(valueAt.select(col("g"), col("rk").as("lo_rk"), col("v").as("lo_v")),
-        Seq("g", "lo_rk"))
-      .join(valueAt.select(col("g"), (col("rk") - 1).as("lo_rk"), col("v").as("hi_v")),
-        Seq("g", "lo_rk"), "left")
+    Relational.exactGroupQuantiles(gaps, Seq(0.5, 0.95, 0.99), maxGroups = 64).coalesce(1)
       .select(col("g"), col("p"),
         round(col("lo_v") * (lit(1.0) - col("frac")) +
           coalesce(col("hi_v"), col("lo_v")) * col("frac"), 4).as("gap_us"))

@@ -51,8 +51,7 @@ object Relational {
     * value at each rank is unique. (A production build would pick
     * bucket bounds from a sample to even out skew; equi-width bounds
     * only affect balance, never correctness.) */
-  private[graft] def bucketedGroupRanks(vals0: DataFrame, numBuckets: Int = 64,
-                                        spreadInput: Boolean = true): DataFrame = {
+  private[graft] def bucketedGroupRanks(vals0: DataFrame, numBuckets: Int = 64): DataFrame = {
     // widen BEFORE fanning out: this helper scans its input three times
     // (min/max stats, bucket assignment, per-bucket counts), and the
     // fixture parquet is a single row-group = a single-task scan. One
@@ -60,12 +59,7 @@ object Relational {
     // parallelism and AQE's exchange reuse feeds all three consumers
     // from it. Row order within equal values changes — ties already
     // rank arbitrarily (see above), the value at each rank is unique.
-    // Callers that hand in an already-wide (checkpointed) frame pass
-    // spreadInput=false to skip the redundant exchange.
-    val vals =
-      if (spreadInput)
-        vals0.repartition(vals0.sparkSession.sparkContext.defaultParallelism)
-      else vals0
+    val vals = vals0.repartition(vals0.sparkSession.sparkContext.defaultParallelism)
     val stats = vals.groupBy("g")
       .agg(min(col("v")).as("vmin"), max(col("v")).as("vmax"))
     val bucketed = vals.join(broadcast(stats), Seq("g"))
@@ -97,14 +91,12 @@ object Relational {
     * fixture files would otherwise scan as one task; AQE exchange
     * reuse feeds every consumer from the materialized exchange).
     * Returns (g, rk, v) for each requested (g, rk); ties between
-    * equal values rank arbitrarily — the value at a rank is unique. */
+    * equal values rank arbitrarily — the value at a rank is unique.
+    * `v` must be non-null: a NULL lands in a NULL bucket that takes
+    * the lowest ranks but is never fetched, so it shifts every rank. */
   private[graft] def valuesAtGroupRanks(vals0: DataFrame, ranks0: DataFrame,
-                                        numBuckets: Int = 64,
-                                        spreadInput: Boolean = true): DataFrame = {
-    val spark = vals0.sparkSession
-    val vals =
-      if (spreadInput) vals0.repartition(spark.sparkContext.defaultParallelism)
-      else vals0
+                                        numBuckets: Int = 64): DataFrame = {
+    val vals = vals0.repartition(vals0.sparkSession.sparkContext.defaultParallelism)
     // the rank list is tiny but typically derived from a count
     // aggregate — materialize it once instead of replaying that scan
     // for the bucket-location join and the final fetch join
@@ -128,6 +120,173 @@ object Relational {
       .withColumn("rk", col("off") + row_number().over(wLocal).cast("long"))
       .join(broadcast(ranks), Seq("g", "rk"))
       .select(col("g"), col("rk"), col("v"))
+  }
+
+  /** `CASE key WHEN k1 THEN v1 … END` over a handful of (key, value)
+    * pairs, keys compared null-safely (NULL when no key matches): a
+    * per-group constant looked up in-row instead of joined, for tables
+    * of at most a few dozen groups that already sit on the driver. */
+  private[graft] def groupLookup(key: Column, table: Seq[(Any, Column)]): Column =
+    if (table.isEmpty) lit(null)
+    else table.tail.foldLeft(when(key <=> lit(table.head._1), table.head._2)) {
+      case (c, (k, v)) => c.when(key <=> lit(k), v)
+    }
+
+  /** Per-(group, p) bound on the strictly-in-bracket values the refine
+    * pass of [[exactGroupQuantiles]] keeps (the smallest ones). A group
+    * of at most this many values is bracketed by its min and max, so
+    * it always resolves there. In a larger group the target rank sits
+    * n/A to 3n/A values above the bracket's low end (A =
+    * [[QaaAccuracy]]: the bracket starts 2n/A below the target, give or
+    * take the sketch's n/A rank error), so up to cap·A/3 values
+    * (1,365,333 at the defaults) a target inside the bracket is among
+    * the kept values. Past that it may not be: then it is fetched from
+    * the bracket's inside values alone (about 4n/A of them), never
+    * from the whole group. */
+  final val QuantileRefineCap = 4096
+
+  /** Exact quantile_cont inputs per (g, p) by bracket-and-refine, the
+    * filter-and-refine shape of REPOSE/Odyssey (PAPERS.md): two
+    * aggregate passes, no rank sort and no checkpoint.
+    *
+    *   - bracket: one aggregate of `count(v)` and `percentile_approx`
+    *     at p ∓ δ, δ = 2/[[QaaAccuracy]] (twice the n/accuracy rank
+    *     error whose contract `quantile_approx_audit` oracles), plus at
+    *     0 and 1 (min and max), collected and count-asserted against
+    *     `maxGroups`.
+    *   - refine: one aggregate over `vals` joined to the brackets (a
+    *     [[groupLookup]] of literals, ≤ maxGroups·|ps| rows), counting
+    *     values below and equal to each endpoint and keeping the
+    *     strictly-inside values in a [[graft.functions.BoundedTopK]] of
+    *     `cap` — memory per (g, p) is bounded under any skew.
+    *   - verify: the counts place each target rank exactly, at an
+    *     endpoint or at a position among the kept inside values. A
+    *     rank they do not place goes through one [[valuesAtGroupRanks]]
+    *     fetch: at rank r − le_lo among the bracket's inside values when
+    *     the counts put it there (a bracket over the cap, see
+    *     [[QuantileRefineCap]]), else — a sketch miss, e.g. a bracket
+    *     that collapses onto one value in a small group — at rank r in
+    *     its whole group.
+    *
+    * Like DuckDB's quantile_cont, NULL values are ignored: n is
+    * `count(v)` and only non-null values are ranked; a group with no
+    * non-null value yields NULL `lo_v`/`hi_v`/`frac`. Returns a local
+    * frame (g, p, n, lo_v, hi_v, frac) with pos = p·(n−1),
+    * lo_v/hi_v = the order statistics at ranks ⌊pos⌋+1 and ⌈pos⌉+1,
+    * frac = pos − ⌊pos⌋; each caller interpolates in its own op order.
+    * The frame spans up to defaultParallelism partitions: a caller that
+    * aggregates or sorts it coalesces it to one partition first, so no
+    * exchange (two or three more jobs over a handful of rows) is
+    * planned. */
+  private[graft] def exactGroupQuantiles(vals0: DataFrame, ps: Seq[Double], maxGroups: Int,
+                                         cap: Int = QuantileRefineCap): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructType}
+    val spark = vals0.sparkSession
+    val gType = vals0.schema("g").dataType
+    val vType = vals0.schema("v").dataType
+    val v = col("v")
+    val vals = vals0.select(col("g"), v).filter(v.isNotNull)
+    val delta = 2.0 / QaaAccuracy
+    val qs = Seq(0.0, 1.0) ++ ps.flatMap(p => Seq(p - delta, p + delta))
+    // over vals0: a group whose values are all NULL keeps its row (n = 0)
+    val stats = vals0.groupBy("g")
+      .agg(count(v).as("n"),
+        percentile_approx(v, array(qs.map(q => lit(q.max(0.0).min(1.0))): _*),
+          lit(QaaAccuracy)).as("a"))
+      .limit(maxGroups + 1).collect()
+    require(stats.length <= maxGroups,
+      s"exactGroupQuantiles: more than $maxGroups groups")
+
+    // per (g, p): n, the two target ranks, frac and the bracket
+    case class Target(g: Any, p: Double, n: Long, lo: Long, hi: Long, frac: Double,
+                      bLo: Any, bHi: Any)
+    val targets = for (s <- stats.toSeq; n = s.getLong(1) if n > 0;
+                       (p, i) <- ps.zipWithIndex) yield {
+      val a = s.getSeq[Any](2)
+      val h = (n - 1).toDouble * p
+      val (b, e) = if (n <= cap) (0, 1) else (2 + 2 * i, 3 + 2 * i)
+      Target(s.get(0), p, n, math.floor(h).toLong + 1, math.ceil(h).toLong + 1,
+        h - math.floor(h), a(b), a(e))
+    }
+    val refined: Map[(Any, Double), Row] =
+      if (targets.isEmpty) Map.empty
+      else {
+        // the brackets ride into the refine pass as literals, not as a
+        // broadcast join: broadcasting even a local frame costs a job
+        val brackets = groupLookup(col("g"), targets.groupBy(_.g).toSeq.map { case (g, ts) =>
+          g -> array(ts.map(t =>
+            struct(lit(t.p).as("p"), lit(t.bLo).as("b_lo"), lit(t.bHi).as("b_hi"))): _*)
+        })
+        val (lo, hi) = (col("b_lo"), col("b_hi"))
+        vals.select(col("g"), v, explode(brackets).as("b"))
+          .select(col("g"), v, col("b.*"))
+          .groupBy("g", "p")
+          .agg(count_if(v < lo).as("lt_lo"), count_if(v <= lo).as("le_lo"),
+            count_if(v < hi).as("lt_hi"), count_if(v <= hi).as("le_hi"),
+            graft.functions.BoundedTopK(cap, when(v > lo && v < hi, struct(v))).as("mid"))
+          .collect().map(r => (r.get(0), r.getDouble(1)) -> r).toMap
+      }
+    // the value at rank r, when the counts place it at a bracket end or
+    // among the kept inside values
+    def place(t: Target, r: Long): Option[Any] = refined.get((t.g, t.p)).flatMap { c =>
+      val (ltLo, leLo, ltHi, leHi) = (c.getLong(2), c.getLong(3), c.getLong(4), c.getLong(5))
+      val mid = c.getSeq[Row](6)
+      if (r <= ltLo || r > leHi) None
+      else if (r <= leLo) Some(t.bLo)
+      else if (r <= ltHi) {
+        val i = r - leLo - 1 // a Long: compare before narrowing
+        if (i < mid.size) Some(mid(i.toInt).get(0)) else None
+      }
+      else Some(t.bHi)
+    }
+    val valueAt = scala.collection.mutable.Map[(Any, Long), Any]()
+    for (t <- targets; r <- Seq(t.lo, t.hi); x <- place(t, r)) valueAt((t.g, r)) = x
+
+    // each rank left is fetched as a rank among the values of one open
+    // range per (g, range): the bracket's inside values, offset by
+    // le_lo, when the counts put it there; else the unbounded range
+    val fetch = for (t <- targets; r <- Seq(t.lo, t.hi) if !valueAt.contains((t.g, r)))
+      yield refined.get((t.g, t.p)).map(c => (c.getLong(3), c.getLong(4))) match {
+        case Some((leLo, ltHi)) if r > leLo && r <= ltHi => (t.g, (t.bLo, t.bHi), leLo, r)
+        case _ => (t.g, (null, null), 0L, r)
+      }
+    if (fetch.nonEmpty) {
+      val ranges = fetch.groupBy(_._1).map { case (g, fs) => g -> fs.map(_._2).distinct }
+      // (g, range index, rank within the range) → rank within the group
+      val want = fetch.map { case (g, range, off, r) =>
+        (g, ranges(g).indexOf(range), r - off) -> r }.toMap
+      val need = spark.createDataFrame(
+        want.keys.toSeq.map { case (g, b, i) => Row(Row(g, b), i) }.asJava,
+        new StructType().add("g", new StructType().add("g", gType).add("b", IntegerType))
+          .add("rk", LongType))
+      val inRange = groupLookup(col("g"), ranges.toSeq.map { case (g, rs) =>
+        g -> array(rs.zipWithIndex.map { case ((lo, hi), b) =>
+          struct(lit(b).as("b"), lit(lo).cast(vType).as("f_lo"), lit(hi).cast(vType).as("f_hi"))
+        }: _*)
+      })
+      val (fLo, fHi) = (col("f.f_lo"), col("f.f_hi"))
+      valuesAtGroupRanks(
+          vals.select(col("g"), v, explode(inRange).as("f"))
+            .filter((fLo.isNull || v > fLo) && (fHi.isNull || v < fHi))
+            .select(struct(col("g"), col("f.b").as("b")).as("g"), v), need)
+        .collect().foreach { row =>
+          val k = row.getStruct(0)
+          valueAt((k.get(0), want((k.get(0), k.getInt(1), row.getLong(1))))) = row.get(2)
+        }
+      val lost = fetch.map(f => f._1 -> f._4).filterNot(valueAt.contains)
+      if (lost.nonEmpty)
+        throw new IllegalStateException(s"exactGroupQuantiles: ranks not found: $lost")
+    }
+
+    val rows = targets.map(t => Row(t.g, t.p, t.n, valueAt((t.g, t.lo)),
+        valueAt((t.g, t.hi)), t.frac)) ++
+      stats.toSeq.filter(_.getLong(1) == 0).flatMap(s =>
+        ps.map(p => Row(s.get(0), p, 0L, null, null, null)))
+    spark.createDataFrame(rows.asJava, new StructType()
+      .add("g", gType).add("p", DoubleType).add("n", LongType)
+      .add("lo_v", vType).add("hi_v", vType).add("frac", DoubleType))
   }
 
   /** TPC-H Q1-style pricing summary. One shuffle; HashAggregate does
@@ -780,46 +939,20 @@ object Relational {
     * two usual scale hazards: no holistic aggregation buffer (the old
     * `percentile()` agg held every group value in one buffer) and no
     * per-group window over the full table (numGroups-wide parallelism
-    * collapse).
-    *
-    * Plan: rows are range-bucketed by value within each group
-    * (`width_bucket` over the group's min/max — deterministic, no
-    * sampling, retry-safe), ranked within each (group, bucket) — many
-    * bounded window partitions instead of one per group — and the
-    * global rank is the bucket-prefix offset (a window over the tiny
-    * (group, bucket) count table) plus the local row_number. Only the
-    * two bracketing order statistics per requested percentile join
-    * back; interpolation matches quantile_cont: pos = p·(n−1),
+    * collapse). The two bracketing order statistics per requested
+    * percentile come from [[exactGroupQuantiles]] (bracket-and-refine;
+    * n counts non-null prices, as quantile_cont ranks them);
+    * interpolation matches quantile_cont: pos = p·(n−1),
     * v = v_lo + frac·(v_hi − v_lo). Both engines interpolate between
     * the same 2-decimal order statistics, so values land on a
     * 4-decimal grid — round(4) erases last-ulp differences without
-    * tie risk. (A production build would pick bucket bounds from a
-    * sample to even out skew; equi-width bounds only affect balance,
-    * never correctness.) */
+    * tie risk. */
   def percentilePrice(spark: SparkSession, dir: String): DataFrame = {
     val vals = Tables.orders(spark, dir)
       .select(col("o_orderpriority").as("g"), col("o_totalprice").as("v"))
-    val stats = vals.groupBy("g")
-      .agg(count(lit(1)).as("n"), min(col("v")).as("vmin"), max(col("v")).as("vmax"))
-    // bracketing order statistics per percentile: pos = p·(n−1), ranks
-    // floor(pos)+1 and ceil(pos)+1 (1-indexed)
-    val targets = stats.select(col("g"), col("n"),
-        explode(array(lit(0.25), lit(0.5), lit(0.75))).as("p"))
-      .withColumn("pos", col("p") * (col("n") - 1).cast("double"))
-      .withColumn("lo", floor(col("pos")).cast("long") + 1)
-      .withColumn("hi", ceil(col("pos")).cast("long") + 1)
-      .withColumn("frac", col("pos") - floor(col("pos")))
-    val needed = targets
-      .select(col("g"), explode(array(col("lo"), col("hi"))).as("rk")).distinct()
-    val valueAt = valuesAtGroupRanks(vals, needed)
-      // ≤ a few rows per group; eager-materialize so the two bracketing
-      // joins below don't each replay the order-statistic fetch
-      .localCheckpoint()
-    targets
-      .join(valueAt.select(col("g"), col("rk").as("lo"), col("v").as("v_lo")), Seq("g", "lo"))
-      .join(valueAt.select(col("g"), col("rk").as("hi"), col("v").as("v_hi")), Seq("g", "hi"))
+    exactGroupQuantiles(vals, Seq(0.25, 0.5, 0.75), maxGroups = 16).coalesce(1)
       .select(col("g"), col("n"), col("p"),
-        round(col("v_lo") + col("frac") * (col("v_hi") - col("v_lo")), 4).as("pv"))
+        round(col("lo_v") + col("frac") * (col("hi_v") - col("lo_v")), 4).as("pv"))
       .groupBy("g")
       .agg(max(col("n")).as("n"),
         max(when(col("p") === 0.25, col("pv"))).as("p25"),
@@ -1947,60 +2080,34 @@ object Relational {
       |  MIN(l_tax), MAX(l_tax) FROM lineitem
       |ORDER BY col_name""".stripMargin
 
-  /** Exact per-group median via the bucketed rank helper: one
-    * rank pass + a broadcast fetch of the two bracketing order
-    * statistics, interpolated in quantile_cont's op order. */
-  private def groupMedian(vals: DataFrame): DataFrame = {
-    val t = vals.groupBy("g").agg(count(lit(1)).as("n"))
-      .select(col("g"), ((col("n") - 1) * 0.5).as("h"))
-      .select(col("g"), (floor(col("h")) + 1).cast("long").as("lo_rk"),
-        (col("h") - floor(col("h"))).as("frac"))
-      .localCheckpoint() // tiny; reused by the fetch and both joins below
-    val needed = t.select(col("g"),
-        explode(array(col("lo_rk"), col("lo_rk") + 1)).as("rk")).distinct()
-    val vAt = valuesAtGroupRanks(vals, needed)
-      .localCheckpoint() // tiny; both bracketing joins reuse one fetch
-    t.join(vAt.select(col("g"), col("rk").as("lo_rk"), col("v").as("lo_v")),
-        Seq("g", "lo_rk"))
-      .join(vAt.select(col("g"), (col("rk") - 1).as("lo_rk"), col("v").as("hi_v")),
-        Seq("g", "lo_rk"), "left")
+  /** Exact per-group median as a local ≤|groups|-row frame (g, med):
+    * [[exactGroupQuantiles]] at p = 0.5, interpolated in
+    * quantile_cont's op order. */
+  private def groupMedian(vals: DataFrame): DataFrame =
+    exactGroupQuantiles(vals, Seq(0.5), maxGroups = 16) // ≤ 5 priorities
       .select(col("g"),
         (col("lo_v") * (lit(1.0) - col("frac")) +
           coalesce(col("hi_v"), col("lo_v")) * col("frac")).as("med"))
-  }
 
   /** Median absolute deviation per group — the robust dispersion
     * that [[outlierZscore]]'s σ is not (one extreme row can move σ
     * arbitrarily; the MAD moves only with the middle of the
     * distribution). Two composed exact medians (values, then absolute
-    * deviations), each a bucketed rank pass — no per-group window,
-    * no unbounded buffer. The input and the deviation table are
-    * cached (spill-safe MEMORY_AND_DISK) and the ≤|groups|-row median
-    * table is eagerly localCheckpoint'ed: groupMedian references its
-    * input from several plan branches, so without materialization the
-    * second median would replay the entire first rank pass per branch
-    * (~16 source scans; this was the slowest query in the bench at
-    * every scale until the lineage cut). */
+    * deviations), each two aggregate passes of [[exactGroupQuantiles]]
+    * — no rank sort, no per-group window, no unbounded buffer. The
+    * first median is a local ≤ 5-row frame: its values ride into the
+    * deviation scan and the final composition as a per-group literal
+    * lookup, so nothing is joined, cached or checkpointed. */
   def madPrice(spark: SparkSession, dir: String): DataFrame = {
     val vals = Tables.orders(spark, dir)
       .select(col("o_orderpriority").as("g"), col("o_totalprice").as("v"))
-      .persist()
-    val med = graft.BoundedCheckpoint(groupMedian(vals), 16) // ≤ 5 groups
-    // devs is eagerly checkpointed too (groupMedian references it from
-    // several branches), which makes THIS the last consumer of vals —
-    // so vals can release synchronously, no listener needed. (A shared
-    // release-after-action listener is wrong here: the checkpoint
-    // action's plan contains vals, so it would release devs' cache
-    // alongside and the final action would replay devs per branch.)
-    val devs = vals.join(broadcast(med), Seq("g"))
-      .select(col("g"), abs(col("v") - col("med")).as("v"))
-      .localCheckpoint()
-    vals.unpersist()
-    groupMedian(devs).withColumnRenamed("med", "mad")
-      .join(broadcast(med), Seq("g"))
+    val medOf = groupLookup(col("g"),
+      groupMedian(vals).collect().toSeq.map(r => r.get(0) -> lit(r.get(1))))
+    groupMedian(vals.select(col("g"), abs(col("v") - medOf).as("v")))
       .select(col("g").as("o_orderpriority"),
-        round(col("med"), 4).as("median_v"),
-        round(col("mad"), 4).as("mad_v"))
+        round(medOf, 4).as("median_v"),
+        round(col("med"), 4).as("mad_v"))
+      .coalesce(1) // a local frame: sort it without an exchange
       .orderBy("o_orderpriority")
   }
 
@@ -2053,43 +2160,19 @@ object Relational {
       |  COUNT(*) AS n_keys
       |FROM orders o FULL OUTER JOIN li ON o.o_orderkey = li.l_orderkey""".stripMargin
 
-  /** Exact p50/p95 for EVERY numeric column in one job — the quantile
+  /** Exact p50/p95 for EVERY numeric column at once — the quantile
     * half of the data-profiling dashboard ([[profileLineitem]] covers
     * nulls/distinct/min/max). The table unpivots to a (col_name,
     * value) stream via `stack` (codegen'd, no UDF, one scan for all
-    * columns) and the shared bucketed-group-rank helper ranks each
-    * column's values in parallel — column count adds no passes and
-    * no per-column windows. */
+    * columns) and [[exactGroupQuantiles]] brackets and refines every
+    * column's quantiles in the same two aggregate passes — column
+    * count adds no passes and no per-column windows. */
   def numericProfileQuantiles(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
     val stackArgs = cols.map(c => s"'$c', $c").mkString(", ")
     val unpivoted = Tables.lineitem(spark, dir)
       .selectExpr(s"stack(${cols.size}, $stackArgs) AS (g, v)")
-      // the (g, v) stream feeds the rank helper AND the per-column
-      // counts/targets below — materialize the single-task stack scan
-      // once at full width instead of replaying it per consumer
-      .repartition(spark.sparkContext.defaultParallelism)
-      .localCheckpoint()
-    val counts = unpivoted.groupBy("g").agg(count(lit(1)).as("n"))
-    val targets = counts
-      .crossJoin(broadcast(Seq(0.5, 0.95).toDF("p")))
-      .withColumn("h", (col("n") - 1) * col("p"))
-      .select(col("g"), col("p"),
-        (floor(col("h")) + 1).cast("long").as("lo_rk"),
-        (col("h") - floor(col("h"))).as("frac"))
-      .localCheckpoint() // tiny; reused by the fetch and both joins below
-    val needed = targets.select(col("g"),
-        explode(array(col("lo_rk"), col("lo_rk") + 1)).as("rk")).distinct()
-    val valueAt = valuesAtGroupRanks(unpivoted, needed, spreadInput = false)
-      // ≤ a few rows per group; eager-materialize so the two bracketing
-      // joins below don't each replay the order-statistic fetch
-      .localCheckpoint()
-    targets
-      .join(valueAt.select(col("g"), col("rk").as("lo_rk"), col("v").as("lo_v")),
-        Seq("g", "lo_rk"))
-      .join(valueAt.select(col("g"), (col("rk") - 1).as("lo_rk"), col("v").as("hi_v")),
-        Seq("g", "lo_rk"), "left")
+    exactGroupQuantiles(unpivoted, Seq(0.5, 0.95), maxGroups = cols.size).coalesce(1)
       .select(col("g"), col("p"),
         round(col("lo_v") * (lit(1.0) - col("frac")) +
           coalesce(col("hi_v"), col("lo_v")) * col("frac"), 4).as("qv"))
@@ -2214,45 +2297,17 @@ object Relational {
       |    AS qty_weighted_price
       |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
 
-  /** Multi-quantile exact percentiles — [[percentilePrice]]'s sort-based
-    * rank-interpolation technique generalized to a GRID of quantiles in
-    * one pass: every (group, quantile) pair gets its two bracketing
-    * order statistics from the same row_number'd sort, then linear
-    * interpolation. Still no unbounded aggregation buffer: the sort is
-    * a shuffle sort, the quantile grid is a broadcast 4-row table, and
-    * each group contributes ≤ 2·|grid| rows to the final join. */
+  /** Multi-quantile exact percentiles — [[percentilePrice]]'s
+    * technique generalized to a GRID of quantiles: every (group,
+    * quantile) pair gets its two bracketing order statistics from the
+    * same two aggregate passes of [[exactGroupQuantiles]], then linear
+    * interpolation. No unbounded aggregation buffer and no sort: the
+    * grid adds rows to the local bracket frame, not passes. */
   def quantileGridPrice(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val grid = Seq(0.25, 0.5, 0.75, 0.95).toDF("q")
     val vals = Tables.orders(spark, dir)
       .select(col("o_orderpriority").as("g"), col("o_totalprice").as("v"))
-    // group sizes from a direct count — don't re-execute the rank plan
-    val counts = Tables.orders(spark, dir)
-      .groupBy(col("o_orderpriority").as("g")).agg(count(lit(1)).as("n"))
-    val qs = counts.crossJoin(broadcast(grid))
-      .select(col("g").as("g_prio"), col("q"),
-        // continuous-quantile index h = (n-1)·q (0-based), split into
-        // floor rank and fraction — the same formula DuckDB's
-        // quantile_cont implements
-        ((col("n") - 1) * col("q")).as("h"))
-      .select(col("g_prio"), col("q"),
-        (floor(col("h")) + 1).cast("long").as("lo_rk"),
-        (col("h") - floor(col("h"))).as("frac"))
-      .localCheckpoint() // tiny; reused by the fetch and both joins below
-    // one order-statistic fetch: all bracketing ranks at once
-    val needed = qs.select(col("g_prio").as("g"),
-        explode(array(col("lo_rk"), col("lo_rk") + 1)).as("rk")).distinct()
-    val valueAt = valuesAtGroupRanks(vals, needed)
-      // ≤ a few rows per group; eager-materialize so the two bracketing
-      // joins below don't each replay the order-statistic fetch
-      .localCheckpoint()
-    qs.join(valueAt.select(col("g").as("g_prio"),
-        col("rk").as("lo_rk"), col("v").as("lo_v")),
-        Seq("g_prio", "lo_rk"))
-      .join(valueAt.select(col("g").as("g_prio"),
-        (col("rk") - 1).as("lo_rk"), col("v").as("hi_v")),
-        Seq("g_prio", "lo_rk"), "left")
-      .select(col("g_prio").as("o_orderpriority"), col("q"),
+    exactGroupQuantiles(vals, Seq(0.25, 0.5, 0.75, 0.95), maxGroups = 16).coalesce(1)
+      .select(col("g").as("o_orderpriority"), col("p").as("q"),
         // lo·(1−frac) + hi·frac — the exact op order quantile_cont
         // uses (verified against DuckDB bit-for-bit; the algebraically
         // equal lo + frac·(hi−lo) differs in the last ulp)
@@ -2271,44 +2326,18 @@ object Relational {
   /** Per-group winsorization: clip order values at their group's
     * exact p05/p95 and report the robust mean — the outlier-taming
     * twin of [[outlierZscore]] (clip instead of drop). The bounds
-    * come from the same sort-based exact-quantile technique as
-    * [[quantileGridPrice]] (rank interpolation in quantile_cont's
-    * exact op order — no unbounded agg buffer), pivoted to one tiny
-    * (group → lo, hi) frame that broadcasts back onto the fact scan;
-    * the clipped sum is decimal-exact so the mean is
-    * partition-order-free. Two passes over the data (rank, then
-    * clip+aggregate) — the minimum for exact bounds. */
+    * come from [[exactGroupQuantiles]] (interpolated in
+    * quantile_cont's exact op order — no unbounded agg buffer),
+    * pivoted to one tiny local (group → lo, hi) frame that broadcasts
+    * back onto the fact scan; the clipped sum is decimal-exact so the
+    * mean is partition-order-free. */
   def winsorizePrices(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val x = col("l_extendedprice")
     val vals = Tables.lineitem(spark, dir)
       .select(col("l_returnflag").as("g"), x.as("v"))
-    // group sizes from a direct count — don't re-execute the rank plan
-    val counts = Tables.lineitem(spark, dir)
-      .groupBy(col("l_returnflag").as("g")).agg(count(lit(1)).as("n"))
-    val qs = counts.crossJoin(broadcast(Seq(0.05, 0.95).toDF("q")))
-      .select(col("g").as("g_rf"), col("q"),
-        ((col("n") - 1) * col("q")).as("h"))
-      .select(col("g_rf"), col("q"),
-        (floor(col("h")) + 1).cast("long").as("lo_rk"),
-        (col("h") - floor(col("h"))).as("frac"))
-      // |l_returnflag| × 2 quantiles ≤ 6 rows; count-asserted so the
-      // downstream broadcast classifies bounded
-      .transform(graft.BoundedCheckpoint(_, 64))
-    // ONE order-statistic fetch: every bracketing rank at once
-    val needed = qs.select(col("g_rf").as("g"),
-        explode(array(col("lo_rk"), col("lo_rk") + 1)).as("rk")).distinct()
-    val valueAt = valuesAtGroupRanks(vals, needed)
-      // ≤ a few rows per group; eager-materialize so the two bracketing
-      // joins below don't each replay the order-statistic fetch
-      .transform(graft.BoundedCheckpoint(_, 64))
-    val quantiles = qs
-      .join(valueAt.select(col("g").as("g_rf"),
-        col("rk").as("lo_rk"), col("v").as("lo_v")), Seq("g_rf", "lo_rk"))
-      .join(valueAt.select(col("g").as("g_rf"),
-        (col("rk") - 1).as("lo_rk"), col("v").as("hi_v")), Seq("g_rf", "lo_rk"), "left")
-      .select(col("g_rf"),
-        col("q"),
+    val quantiles = exactGroupQuantiles(vals, Seq(0.05, 0.95), maxGroups = 16).coalesce(1)
+      .select(col("g").as("g_rf"),
+        col("p").as("q"),
         (col("lo_v") * (lit(1.0) - col("frac")) +
           coalesce(col("hi_v"), col("lo_v")) * col("frac")).as("qv"))
       .groupBy("g_rf")
@@ -3619,37 +3648,17 @@ object Relational {
 
   /** Tukey-fence (IQR) outlier screen over events.value per event
     * type — the distribution-free sibling of [[outlierZscore]]: exact
-    * p25/p75 from the shared bucketed-group-rank helper (no
-    * |groups|-task window, no unbounded buffer), fences at 1.5·IQR,
-    * then one broadcast of the tiny per-group bounds back onto the
-    * fact scan for the counts. Fences compare UNROUNDED (both engines
-    * compute the identical IEEE interpolation — the winsorize
-    * discipline) and report rounded. */
+    * p25/p75 from [[exactGroupQuantiles]] (no |groups|-task window, no
+    * unbounded buffer), fences at 1.5·IQR, then one broadcast of the
+    * tiny local per-group bounds back onto the fact scan for the
+    * counts. Fences compare UNROUNDED (both engines compute the
+    * identical IEEE interpolation — the winsorize discipline) and
+    * report rounded. */
   def outlierIqr(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val ev = Tables.events(spark, dir)
       .select(col("event_type").as("g"), col("value").as("v"))
-    val counts = ev.groupBy("g").agg(count(lit(1)).as("n"))
-    val qs = counts.crossJoin(broadcast(Seq(0.25, 0.75).toDF("q")))
-      .select(col("g").as("g_q"), col("q"), ((col("n") - 1) * col("q")).as("h"))
-      .select(col("g_q"), col("q"),
-        (floor(col("h")) + 1).cast("long").as("lo_rk"),
-        (col("h") - floor(col("h"))).as("frac"))
-      // |event_type| × 2 quantiles ≤ 10 rows; count-asserted bound
-      .transform(graft.BoundedCheckpoint(_, 64))
-    val needed = qs.select(col("g_q").as("g"),
-      explode(array(col("lo_rk"), col("lo_rk") + 1)).as("rk")).distinct()
-    val valueAt = valuesAtGroupRanks(ev, needed)
-      // ≤ a few rows per group; eager-materialize so the two bracketing
-      // joins below don't each replay the order-statistic fetch
-      .transform(graft.BoundedCheckpoint(_, 64))
-    val quantiles = qs
-      .join(valueAt.select(col("g").as("g_q"),
-        col("rk").as("lo_rk"), col("v").as("lo_v")), Seq("g_q", "lo_rk"))
-      .join(valueAt.select(col("g").as("g_q"),
-        (col("rk") - 1).as("lo_rk"), col("v").as("hi_v")),
-        Seq("g_q", "lo_rk"), "left")
-      .select(col("g_q"), col("q"),
+    val quantiles = exactGroupQuantiles(ev, Seq(0.25, 0.75), maxGroups = 64).coalesce(1)
+      .select(col("g").as("g_q"), col("p").as("q"),
         (col("lo_v") * (lit(1.0) - col("frac")) +
           coalesce(col("hi_v"), col("lo_v")) * col("frac")).as("qv"))
       .groupBy("g_q")

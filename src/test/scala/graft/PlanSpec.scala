@@ -445,6 +445,47 @@ class PlanSpec extends SparkSpec {
       s"stats frame must broadcast, not shuffle the fact side:\n$plan")
   }
 
+  /** The lines whose percentiles come from Relational.exactGroupQuantiles. */
+  private val ExactQuantileLines = Seq("curriculum_order", "gap_percentiles", "mad_price",
+    "numeric_profile_quantiles", "outlier_iqr", "percentile_price", "quantile_grid_price",
+    "winsorize_prices")
+
+  test("exact-quantile lines broadcast only local frames, with no allowlist entry") {
+    for (name <- ExactQuantileLines) {
+      assert(!DomainBoundedBroadcastAllowlist(name), name)
+      val plan = SparkEntry.queries(name)(spark, sf0001).queryExecution.optimizedPlan
+      assert(unboundedBroadcastBuilds(plan).isEmpty, s"$name:\n$plan")
+      assert(plan.collect { case l: LocalRelation => l }.nonEmpty,
+        s"$name: the quantiles should arrive as a local frame:\n$plan")
+      assert(!plan.exists(_.nodeName == "LogicalRDD"), s"$name checkpoints:\n$plan")
+    }
+    // winsorize joins its bounds back onto the scan as a broadcast local frame
+    val win = SparkEntry.queries("winsorize_prices")(spark, sf0001).queryExecution.optimizedPlan
+    assert(win.exists {
+      case j: Join => j.hint.rightHint.exists(_.strategy.isDefined) &&
+        j.right.exists(_.isInstanceOf[LocalRelation])
+      case _ => false
+    }, s"winsorize_prices: no broadcast of a local quantile frame:\n$win")
+  }
+
+  test("mad_price (build plus noop write, sf0.01) runs at most 12 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sf001 = new java.io.File(new java.io.File(sf0001).getParentFile, "sf0.01").getPath
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftTestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      SparkEntry.queries("mad_price")(spark, sf001)
+        .write.format("noop").mode("overwrite").save()
+      org.apache.spark.GraftTestBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get > 0 && jobs.get <= 12, s"mad_price ran ${jobs.get} jobs")
+  }
+
   test("inverted_index aggregates postings via the bounded heap, partial-first") {
     val plan = graft.ext.TextAnalysis.invertedIndex(spark, sf0001)
       .queryExecution.executedPlan.toString
