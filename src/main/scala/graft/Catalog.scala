@@ -111,7 +111,7 @@ final class Catalog(spark: SparkSession) {
     val bak = new java.io.File(path + ".old")
     require(old.renameTo(bak), s"cannot move $path aside")
     require(new java.io.File(tmp).renameTo(old), s"cannot move $tmp into place")
-    graft.streaming.EventStream.deleteStaged(bak.toPath)
+    graft.streaming.BoundedReplay.deleteStaged(bak.toPath)
     parts(new java.io.File(path)).length
   }
 }

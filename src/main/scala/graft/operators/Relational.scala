@@ -39,49 +39,10 @@ object Relational {
 
   private def ts(s: String): Column = lit(s).cast("timestamp")
 
-  /** (g, v) → (g, v, rk): per-group ascending rank WITHOUT a
-    * per-group window. `Window.partitionBy(g)` funnels each group
-    * into one task — with a handful of groups that's a parallelism
-    * collapse on exactly the biggest inputs. Instead: deterministic
-    * equi-width value buckets localize the sort to (group × bucket)
-    * slices whose windows run in parallel, and a tiny prefix-count
-    * table (|groups|·|buckets| rows) turns local row numbers into
-    * global in-group ranks. Rank ties between equal values order
-    * arbitrarily, which is irrelevant for order statistics — the
-    * value at each rank is unique. (A production build would pick
-    * bucket bounds from a sample to even out skew; equi-width bounds
-    * only affect balance, never correctness.) */
-  private[graft] def bucketedGroupRanks(vals0: DataFrame, numBuckets: Int = 64): DataFrame = {
-    // widen BEFORE fanning out: this helper scans its input three times
-    // (min/max stats, bucket assignment, per-bucket counts), and the
-    // fixture parquet is a single row-group = a single-task scan. One
-    // round-robin exchange materializes the (g, v) stream once at full
-    // parallelism and AQE's exchange reuse feeds all three consumers
-    // from it. Row order within equal values changes — ties already
-    // rank arbitrarily (see above), the value at each rank is unique.
-    val vals = vals0.repartition(vals0.sparkSession.sparkContext.defaultParallelism)
-    val stats = vals.groupBy("g")
-      .agg(min(col("v")).as("vmin"), max(col("v")).as("vmax"))
-    val bucketed = vals.join(broadcast(stats), Seq("g"))
-      .select(col("g"), col("v"),
-        when(col("vmin") === col("vmax"), lit(1L))
-          .otherwise(width_bucket(col("v"), col("vmin"), col("vmax"), lit(numBuckets)))
-          .as("bkt"))
-    val wLocal = Window.partitionBy("g", "bkt").orderBy("v")
-    val withRn = bucketed.withColumn("rn", row_number().over(wLocal).cast("long"))
-    val wOff = Window.partitionBy("g").orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bucketed.groupBy("g", "bkt").agg(count(lit(1)).as("c"))
-      .withColumn("off", coalesce(sum(col("c")).over(wOff), lit(0L)))
-      .select("g", "bkt", "off")
-    withRn.join(broadcast(offsets), Seq("g", "bkt"))
-      .select(col("g"), col("v"), (col("off") + col("rn")).as("rk"))
-  }
-
   /** Exact value at specific global in-group ranks WITHOUT ranking
     * the whole input — the order-statistic fetch every percentile
-    * query actually needs. [[bucketedGroupRanks]] sorts every row
-    * just so a handful of ranks can be joined out; here the
+    * query actually needs. Ranking every row sorts all the data just
+    * so a handful of ranks can be joined out; here the
     * per-(group, bucket) count histogram (a hash aggregate — no
     * sort) locates which bucket slice holds each requested rank, and
     * ONLY those slices are row-number'd: with |targets| ≤ a few per
@@ -2527,7 +2488,7 @@ object Relational {
     * (cheapest part at every size class). The textbook definition is
     * the O(n²) NOT-EXISTS dominance test — that's the oracle, never
     * the plan. Scale shape: collapse to distinct (price, size) pairs
-    * first (hash agg), then the bucketedGroupRanks discipline — a
+    * first (hash agg), then sort inside equi-width value buckets — a
     * single global window would funnel every pair into one task, so
     * dominance is split into (a) a per-price-bucket window that runs
     * one task per bucket and (b) a strictly-earlier-bucket running
@@ -3582,7 +3543,7 @@ object Relational {
         datediff(lit("2025-01-01").cast("date"), col("last_date")).as("recency"),
         col("freq"), col("money")).localCheckpoint()
     val n = facts.count()
-    // row-keyed variant of the bucketedGroupRanks discipline: rank by
+    // per-value-bucket ranking (as in valuesAtGroupRanks): rank by
     // (metric, custkey) — a total order, so both engines agree — with
     // the sort localized to value buckets and stitched by a ≤64-row
     // prefix-offset table (no single-partition global window)

@@ -2,45 +2,12 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.types._
 
 /** Streaming document operators — the incremental twins of the batch
   * dedup pass, for corpora that arrive continuously (crawl output,
   * log shipping) rather than as a static snapshot.
   */
 object DocStream {
-
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("text", StringType),
-    StructField("lang", StringType), StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
-  /** ONE bounded-replay harness for every document-stream query:
-    * stage the corpus into a fresh directory (FileStreamSource wants
-    * a directory — the unit a deployment tails), open it with the
-    * shared schema, run `build`'s plan to completion in Complete mode
-    * against a memory sink, and return the final table. A harness fix
-    * (staging, cleanup, state parallelism) lands once, for all
-    * twins. */
-  private def runDocStream(spark: SparkSession, dir: String, tag: String)(
-      build: DataFrame => DataFrame): DataFrame = {
-    val streamDir = java.nio.file.Files.createTempDirectory(s"graft-$tag-stream")
-    EventStream.stageParquetCopy(
-      java.nio.file.Path.of(s"$dir/documents.parquet"),
-      streamDir, "documents.parquet")
-    val stream = spark.readStream.schema(docSchema).parquet(streamDir.toString)
-    val name =
-      s"graft_stream_${tag}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = EventStream.withBoundedStateParallelism(spark) {
-      build(stream).writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete).start()
-    }
-    try q.processAllAvailable() finally {
-      q.stop(); EventStream.deleteStaged(streamDir)
-    }
-    spark.table(name)
-  }
 
   /** Streaming exact dedup: incrementally maintain, per content
     * fingerprint, the keeper (min doc_id) and the copy count. The
@@ -56,7 +23,7 @@ object DocStream {
     * stream for the oracle run; at scale this runs in update mode
     * with a sink that upserts by fingerprint. */
   def streamingDedup(spark: SparkSession, dir: String): DataFrame =
-    runDocStream(spark, dir, "dedup") { stream =>
+    BoundedReplay.documents(spark, dir) { stream =>
       stream
         .groupBy(md5(col("text")).as("fp"))
         .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("n_copies"))
@@ -77,7 +44,7 @@ object DocStream {
     * scan is exactly [[graft.ext.Pii.piiScan]]'s expressions, so the
     * bounded replay verifies against the same pattern set in SQL. */
   def streamingPiiMonitor(spark: SparkSession, dir: String): DataFrame =
-    runDocStream(spark, dir, "pii") { stream =>
+    BoundedReplay.documents(spark, dir) { stream =>
       val perDoc = graft.ext.Pii.Patterns.map { case (nm, pat, _) =>
         regexp_count(col("text"), lit(pat)).cast("long").as(s"n_$nm")
       }
@@ -127,7 +94,7 @@ object DocStream {
       // table (the deployment's upsert table) — and gives the fold's
       // self-join fresh attribute ids (a memory-sink view joined with
       // its own aggregate otherwise conflicts at resolution)
-      runDocStream(spark, dir, "langmix") { stream =>
+      BoundedReplay.documents(spark, dir) { stream =>
         stream.groupBy(col("source"), col("lang"))
           .agg(count(lit(1)).as("n"))
       }.localCheckpoint())
@@ -148,7 +115,7 @@ object DocStream {
     * mode over a bounded replay for the oracle run; a deployment
     * runs update mode into a dashboard upsert. */
   def streamingQualityMonitor(spark: SparkSession, dir: String): DataFrame =
-    runDocStream(spark, dir, "qual") { stream =>
+    BoundedReplay.documents(spark, dir) { stream =>
       stream
         .select(col("source"),
           graft.ext.TextAnalysis.qualityReason(col("text")).as("reason"),
@@ -183,7 +150,7 @@ object DocStream {
     * scan. A deployment runs update mode into a manifest upsert and
     * ships shards whose digest went quiet. */
   def streamingShardManifest(spark: SparkSession, dir: String): DataFrame =
-    runDocStream(spark, dir, "shard") { stream =>
+    BoundedReplay.documents(spark, dir) { stream =>
       graft.ext.Sampling.shardManifestAgg(graft.ext.Sampling.shardRows(stream))
     }.orderBy("shard")
 
@@ -221,7 +188,7 @@ object DocStream {
       graft.Tables.documents(spark, dir).select(col("doc_id"), col("text")))
       .localCheckpoint()
     val isDelta = col("doc_id") % Dedup.DeltaMod === (Dedup.DeltaMod - 1)
-    runDocStream(spark, dir, "incdedup") { stream =>
+    BoundedReplay.documents(spark, dir) { stream =>
       // sign per-row (signatureCol — pure projection): the aggregate-
       // built batch signature would be a SECOND streaming aggregation
       // ahead of the argmax, which Structured Streaming forbids. Same
@@ -269,7 +236,7 @@ object DocStream {
       .select(col("g")).distinct()
       .withColumn("hit", lit(1L))
       .localCheckpoint() // frozen standing state, ContextCleaner-freed
-    runDocStream(spark, dir, "subscreen") { stream =>
+    BoundedReplay.documents(spark, dir) { stream =>
       Dedup.gramRows(stream.filter(isDelta)
           .select(col("doc_id"), col("text")))
         .join(baseGrams, Seq("g"), "left")
@@ -297,7 +264,7 @@ object DocStream {
     * it after the token aggregation, which is exactly why it rides as
     * a view over state rather than inside the stream.) */
   def streamingMixtureMonitor(spark: SparkSession, dir: String): DataFrame = {
-    val state = runDocStream(spark, dir, "mix") { stream =>
+    val state = BoundedReplay.documents(spark, dir) { stream =>
       stream
         .select(col("source"),
           size(graft.ext.TextAnalysis.tokens(col("text"))).cast("long")
@@ -322,7 +289,7 @@ object DocStream {
     * and arrival order cannot change any register. */
   def streamingHllMonitor(spark: SparkSession, dir: String): DataFrame =
     graft.ext.Sketches.hllMergeReport(spark, dir,
-      runDocStream(spark, dir, "hll") { stream =>
+      BoundedReplay.documents(spark, dir) { stream =>
         graft.ext.Sketches.hllSourceRegs(
           stream.select(col("source"), col("text")))
       })
@@ -342,7 +309,7 @@ object DocStream {
     * monitor is the ingest side of that algebra. */
   def streamingKmvMonitor(spark: SparkSession, dir: String): DataFrame =
     graft.ext.Sketches.kmvMergeReport(spark, dir,
-      runDocStream(spark, dir, "kmv") { stream =>
+      BoundedReplay.documents(spark, dir) { stream =>
         graft.ext.Sketches.kmvSourceSketch(
           stream.select(col("source"), col("text")))
       })
@@ -363,7 +330,7 @@ object DocStream {
     * percentile questions mid-stream in O(k) state per source. */
   def streamingQuantileMonitor(spark: SparkSession, dir: String): DataFrame =
     graft.ext.Sketches.qsMergeReport(spark, dir,
-      runDocStream(spark, dir, "qsk") { stream =>
+      BoundedReplay.documents(spark, dir) { stream =>
         graft.ext.Sketches.qsSourceSketch(
           stream.select(col("doc_id"), col("source"), col("n_chars")))
       })
@@ -382,7 +349,7 @@ object DocStream {
     * exploding in the crawl, right now" monitor: the sketch answers
     * point queries mid-stream without ever holding the vocabulary. */
   def streamingCmsMonitor(spark: SparkSession, dir: String): DataFrame = {
-    val cells = runDocStream(spark, dir, "cms") { stream =>
+    val cells = BoundedReplay.documents(spark, dir) { stream =>
       graft.ext.Sketches.cmsOccurrenceCells(stream.select(col("text")))
     }
     graft.ext.Sketches.cmsProbeReport(
@@ -410,7 +377,7 @@ object DocStream {
     * bin may absorb one file's boundary overflow and save a bin the
     * pure byte quota would open. */
   def streamingCompactionMonitor(spark: SparkSession, dir: String): DataFrame =
-    runDocStream(spark, dir, "compact") { stream =>
+    BoundedReplay.documents(spark, dir) { stream =>
       stream
         .select(col("source"), col("n_chars").as("bytes"))
         .withColumn("small",
@@ -456,7 +423,7 @@ object DocStream {
     * SAME SQL as the batch `wordcount` query); a deployment runs
     * update mode into an upsert-by-word sink. */
   def streamingWordCount(spark: SparkSession, dir: String): DataFrame =
-    runDocStream(spark, dir, "wc") { stream =>
+    BoundedReplay.documents(spark, dir) { stream =>
       stream
         .select(graft.operators.WordCount.tokens(col("text")).as("word"))
         .filter(length(col("word")) > 0)
@@ -485,7 +452,7 @@ object DocStream {
     import graft.ext.{Dedup, Pipeline}
     val st = Pipeline.readyState(spark, dir)
     val isDelta = col("doc_id") % Dedup.DeltaMod === (Dedup.DeltaMod - 1)
-    val screen = runDocStream(spark, dir, "ready") { stream =>
+    val screen = BoundedReplay.documents(spark, dir) { stream =>
       Pipeline.deltaDocScreen(st)(stream.filter(isDelta)
         .select(col("doc_id"), col("source"), col("text")))
     }
@@ -528,7 +495,7 @@ object DocStream {
         col("sig").as("bs"), col("bn"), col("rep"))
       .localCheckpoint()
     val isDelta = col("doc_id") % Dedup.DeltaMod === (Dedup.DeltaMod - 1)
-    val edges = runDocStream(spark, dir, "groups") { stream =>
+    val edges = BoundedReplay.documents(spark, dir) { stream =>
       stream.filter(isDelta)
         .select(col("doc_id"), Dedup.signatureCol(col("text")).as("sig"))
         .select(col("doc_id"), col("sig"),

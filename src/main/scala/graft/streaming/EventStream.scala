@@ -30,165 +30,6 @@ object EventStream {
 
   case class SessionState(start: Long, last: Long, n: Long, total: Double)
 
-  /** Run `body` with state parallelism sized for a bounded replay: a
-    * streaming stateful operator opens one state store per shuffle
-    * partition and pays a per-store commit EVERY micro-batch, so at 32
-    * partitions the commits — not the rows — dominate a
-    * run-to-completion query (measured on the interval join: 10.0 s →
-    * 2.7 s at 8). Fixed at plan time, hence set before start() and
-    * restored after. Production streams with real key cardinality keep
-    * the session default. */
-  private[graft] def withBoundedStateParallelism[T](
-      spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** The fixture's physical `ts` encoding: `LongType` when events.parquet
-    * carries parquet TIMESTAMP(NANOS) (read as raw nanos via
-    * `legacy.parquet.nanosAsLong`), or a native timestamp type when the
-    * fixture ships TIMESTAMP(MICROS). Drives both the file-stream read
-    * schema and sentinel staging so bounded replays work on either
-    * fixture vintage — see [[graft.Tables.events]] for the batch twin. */
-  private def eventsTsType(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): org.apache.spark.sql.types.DataType = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
-  }
-
-  private def eventSchema(tsType: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", tsType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-  }
-
-  /** Stage `dir/events.parquet` into a fresh temp directory
-    * (FileStreamSource wants a DIRECTORY of files — the unit a real
-    * deployment tails) and open it as a bounded file stream with `ts`
-    * normalized to µs TimestampType regardless of fixture encoding. */
-  private def stagedEventStream(spark: org.apache.spark.sql.SparkSession,
-                                dir: String, prefix: String)
-      : (DataFrame, java.nio.file.Path,
-         org.apache.spark.sql.types.DataType) = {
-    val tsType = eventsTsType(spark, dir)
-    val streamDir = java.nio.file.Files.createTempDirectory(prefix)
-    stageParquetCopy(java.nio.file.Path.of(s"$dir/events.parquet"),
-      streamDir, "events.parquet")
-    (openEventStream(spark, streamDir, tsType), streamDir, tsType)
-  }
-
-  private def openEventStream(spark: org.apache.spark.sql.SparkSession,
-                              streamDir: java.nio.file.Path,
-                              tsType: org.apache.spark.sql.types.DataType)
-      : DataFrame = {
-    val raw = spark.readStream.schema(eventSchema(tsType))
-      .parquet(streamDir.toString)
-    tsType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _ =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-    }
-  }
-
-  /** A sentinel timestamp literal (epoch µs) in the fixture's own `ts`
-    * encoding, so staged sentinel files unify with the events schema. */
-  private def tsLit(us: Long, tsType: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.Column = tsType match {
-    case org.apache.spark.sql.types.LongType => lit(us * 1000L) // raw nanos
-    case t => timestamp_micros(lit(us)).cast(t)
-  }
-
-  /** Write `sentinels` (already in the events schema) as one parquet
-    * file inside `streamDir` so the bounded replay sees them as a
-    * second input file. Returns the scratch dir for cleanup. */
-  private def stageSentinels(sentinels: DataFrame,
-                             streamDir: java.nio.file.Path,
-                             prefix: String): java.nio.file.Path = {
-    val tmp = java.nio.file.Files.createTempDirectory(prefix)
-    sentinels.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = tmp.toFile.listFiles()
-      .filter(f => f.getName.startsWith("part-") &&
-        f.getName.endsWith(".parquet")).head
-    java.nio.file.Files.move(part.toPath, streamDir.resolve("sentinels.parquet"))
-    tmp
-  }
-
-  /** Test hook: stage `dir/events.parquet` and open it as a bounded
-    * file stream with `ts` normalized — the exact read path the
-    * OverFiles queries use, exposed so specs exercise it against
-    * whatever encoding the fixture vintage ships. */
-  private[graft] def stageEventStreamForTest(
-      spark: org.apache.spark.sql.SparkSession, dir: String)
-      : (DataFrame, java.nio.file.Path) = {
-    val (stream, streamDir, _) = stagedEventStream(spark, dir, "graft-test-stream")
-    (stream, streamDir)
-  }
-
-  /** Stage a parquet source into a stream directory, handling BOTH
-    * physical layouts a dataset ships in: a single file (the
-    * pandas-written gate fixtures) or a DIRECTORY of part files
-    * (anything Spark wrote — every real lake table, the scale-probe
-    * fixtures). A bare `Files.copy` on a directory copies only the
-    * empty directory entry, so the replay would silently stream ZERO
-    * rows — exactly the failure the 100× probe surfaced (ratio 0.1:
-    * an empty stream is very fast). */
-  private[graft] def stageParquetCopy(src: java.nio.file.Path,
-                                      streamDir: java.nio.file.Path,
-                                      name: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.isDirectory(src)) {
-      val listing = java.nio.file.Files.list(src)
-      // Files.list holds a directory handle until closed — each staged
-      // replay leaked one before this try/finally
-      val entries = try listing.iterator().asScala.toVector.sortBy(_.toString)
-        finally listing.close()
-      // a key=value partitioned layout carries column VALUES in the
-      // directory names; flattening the files here would silently drop
-      // those columns, so refuse loudly instead of staging wrong data
-      if (entries.exists(java.nio.file.Files.isDirectory(_)))
-        throw new IllegalArgumentException(
-          s"stageParquetCopy: $src contains subdirectories (partitioned " +
-            "layout?) — staged streaming replays support only a flat " +
-            "file/part-file layout; rewrite the source unpartitioned first")
-      val parts = entries.filter(_.getFileName.toString.endsWith(".parquet"))
-      // zero staged files = a replay that streams zero rows and reports
-      // zeros as if it ran — the silent failure mode this helper exists
-      // to prevent; fail the query instead
-      if (parts.isEmpty)
-        throw new IllegalArgumentException(
-          s"stageParquetCopy: no *.parquet files under $src — refusing to " +
-            "stage an empty replay (it would silently stream zero rows)")
-      parts.zipWithIndex.foreach { case (p, i) =>
-        java.nio.file.Files.copy(p, streamDir.resolve(s"part$i-$name"))
-      }
-    } else java.nio.file.Files.copy(src, streamDir.resolve(name))
-  }
-
-  /** Remove a staged streaming directory once its bounded run is done
-    * (each run-to-completion query stages a corpus copy). */
-  private[graft] def deleteStaged(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-    }
-  }
-
-  /** Max event timestamp in epoch µs, 0 for an EMPTY events table —
-    * `Row.getLong` on the null max of an empty aggregate throws, and
-    * a 0-row source is a legitimate bounded-replay input (the
-    * sentinels then sit at epoch+Δ and the stream emits nothing). */
-  private def maxTsMicros(batch: DataFrame): Long = {
-    val r = batch.agg(max(unix_micros(col("ts")))).first()
-    if (r.isNullAt(0)) 0L else r.getLong(0)
-  }
-
   // session boundaries are tracked in epoch MICROseconds: the event
   // timestamps carry microsecond precision and a millis-based state
   // would emit truncated session_start/end (breaking oracle parity)
@@ -224,20 +65,12 @@ object EventStream {
     * SAME DuckDB oracle. Complete mode because a bounded stream's
     * final window never passes the watermark in append mode. */
   def windowedCountsOverFiles(spark: org.apache.spark.sql.SparkSession,
-                              dir: String): DataFrame = {
-    val (stream, streamDir, _) = stagedEventStream(spark, dir, "graft-stream")
-    val name = s"graft_stream_wc_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = withBoundedStateParallelism(spark) {
+                              dir: String): DataFrame =
+    BoundedReplay.events(spark, dir, OutputMode.Complete) { stream =>
       windowedCounts(stream, watermark = "0 seconds")
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete).start()
-    }
-    try q.processAllAvailable() finally { q.stop(); deleteStaged(streamDir) }
-    spark.table(name)
-      .select(col("window_start").as("hour_ts"), col("event_type"),
+    }.select(col("window_start").as("hour_ts"), col("event_type"),
         col("n"), col("sum_value"))
       .orderBy("hour_ts", "event_type")
-  }
 
   /** SLIDING windowed counts run to completion: 1-hour windows
     * advancing every 15 minutes, so each event lands in FOUR
@@ -252,9 +85,7 @@ object EventStream {
     * slide < length. */
   def slidingCountsOverFiles(spark: org.apache.spark.sql.SparkSession,
                              dir: String): DataFrame = {
-    val (stream, streamDir, _) = stagedEventStream(spark, dir, "graft-swc-stream")
-    val name = s"graft_stream_swc_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = withBoundedStateParallelism(spark) {
+    BoundedReplay.events(spark, dir, OutputMode.Complete) { stream =>
       stream
         .withWatermark("ts", "0 seconds")
         .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
@@ -262,11 +93,7 @@ object EventStream {
           sum(col("value").cast(DecimalType(18, 2))).cast("double").as("sum_value"))
         .select(col("window.start").as("window_start"), col("event_type"),
           col("n"), col("sum_value"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete).start()
-    }
-    try q.processAllAvailable() finally { q.stop(); deleteStaged(streamDir) }
-    spark.table(name).orderBy("window_start", "event_type")
+    }.orderBy("window_start", "event_type")
   }
 
   def slidingCountsOverFilesOracle: String =
@@ -297,19 +124,13 @@ object EventStream {
       .groupBy(col("event_type"))
       .agg((sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
         .cast("double") / count(lit(1))).as("avg_value"))
-    val (stream, streamDir, _) = stagedEventStream(spark, dir, "graft-stream")
-    val name = s"graft_stream_ss_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = withBoundedStateParallelism(spark) {
+    BoundedReplay.events(spark, dir, OutputMode.Complete) { stream =>
       stream.join(broadcast(typeAvg), Seq("event_type"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_total"),
           sum(when(col("value") > col("avg_value"), 1L).otherwise(0L))
             .as("n_above"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete).start()
-    }
-    try q.processAllAvailable() finally { q.stop(); deleteStaged(streamDir) }
-    spark.table(name).orderBy("event_type")
+    }.orderBy("event_type")
   }
 
   def streamStaticJoinOverFilesOracle: String =
@@ -345,16 +166,12 @@ object EventStream {
           .cast("double").as("sxx"))
       .select(col("event_type"), (col("sx") / col("n")).as("mean"),
         sqrt((col("sxx") - col("sx") * col("sx") / col("n")) / col("n")).as("sd"))
-    val (stream, streamDir, _) = stagedEventStream(spark, dir, "graft-stream")
-    val name = s"graft_stream_oz_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = stream.join(broadcast(stats), Seq("event_type"))
-      .select(col("event_id"), col("event_type"),
-        round((col("value") - col("mean")) / col("sd"), 6).as("z"))
-      .filter(abs(col("z")) > 2.0)
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append).start()
-    try q.processAllAvailable() finally { q.stop(); deleteStaged(streamDir) }
-    spark.table(name).orderBy("event_id")
+    BoundedReplay.events(spark, dir, OutputMode.Append) { stream =>
+      stream.join(broadcast(stats), Seq("event_type"))
+        .select(col("event_id"), col("event_type"),
+          round((col("value") - col("mean")) / col("sd"), 6).as("z"))
+        .filter(abs(col("z")) > 2.0)
+    }.orderBy("event_id")
   }
 
   def outlierScoreOverFilesOracle: String =
@@ -454,9 +271,7 @@ object EventStream {
   def asofOverFiles(spark: org.apache.spark.sql.SparkSession,
                     dir: String): DataFrame = {
     import spark.implicits._
-    val (stream, streamDir, _) = stagedEventStream(spark, dir, "graft-asof-stream")
-    val name = s"graft_stream_asof_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = withBoundedStateParallelism(spark) {
+    BoundedReplay.events(spark, dir, OutputMode.Append) { stream =>
       // NULL-key contract: an as-of join is keyed per user, so an event
       // with no user_id has no stream to match in — dropped, same as
       // keyed-stream semantics everywhere (a NULL key would otherwise
@@ -499,12 +314,7 @@ object EventStream {
             out.iterator
         }
         .toDF()
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).start()
-    }
-    try q.processAllAvailable() finally { q.stop(); deleteStaged(streamDir) }
-    spark.table(name)
-      .select(col("event_id"), col("user_id"), col("ts"),
+    }.select(col("event_id"), col("user_id"), col("ts"),
         col("prev_click_ts"), col("gap_us"))
       .orderBy("event_id")
   }
@@ -524,18 +334,12 @@ object EventStream {
     * documented contract, not a defect.) */
   def distinctKeysOverFiles(spark: org.apache.spark.sql.SparkSession,
                             dir: String): DataFrame = {
-    val (stream, streamDir, _) = stagedEventStream(spark, dir, "graft-dk-stream")
-    val name = s"graft_stream_dk_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = withBoundedStateParallelism(spark) {
+    BoundedReplay.events(spark, dir, OutputMode.Append) { stream =>
       stream
         .withWatermark("ts", "10 minutes")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).start()
-    }
-    try q.processAllAvailable() finally { q.stop(); deleteStaged(streamDir) }
-    spark.table(name).orderBy("user_id", "event_type")
+    }.orderBy("user_id", "event_type")
   }
 
   def distinctKeysOverFilesOracle: String =
@@ -561,19 +365,13 @@ object EventStream {
       .filter(unix_micros(col("ts")) <= pf.mid)
       .select(EventOps.psiBin(pf).as("bin"))
       .groupBy("bin").agg(count(lit(1)).as("nb"))
-    val (stream, streamDir, _) = stagedEventStream(spark, dir, "graft-psi-stream")
-    val name = s"graft_stream_psi_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = withBoundedStateParallelism(spark) {
-      stream
-        .filter(unix_micros(col("ts")) > pf.mid) // the ARRIVING half
+    val arriving = BoundedReplay.events(spark, dir, OutputMode.Complete) {
+      _.filter(unix_micros(col("ts")) > pf.mid) // the ARRIVING half
         .select(EventOps.psiBin(pf).as("bin"))
         .groupBy("bin").agg(count(lit(1)).as("nd"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete).start()
     }
-    try q.processAllAvailable() finally { q.stop(); deleteStaged(streamDir) }
     val cells = baseCells
-      .join(spark.table(name), Seq("bin"), "full_outer")
+      .join(arriving, Seq("bin"), "full_outer")
       .select(col("bin"), coalesce(col("nb"), lit(0L)).as("nb"),
         coalesce(col("nd"), lit(0L)).as("nd"))
     EventOps.psiAssemble(spark, cells)
@@ -593,18 +391,12 @@ object EventStream {
     * are current, right now" without rescanning the corpus. */
   def freshnessMonitorOverFiles(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val (stream, streamDir, _) =
-      stagedEventStream(spark, dir, "graft-fresh-stream")
-    val name = s"graft_stream_fresh_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = withBoundedStateParallelism(spark) {
-      stream
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"), max(col("ts")).as("last_ts"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete).start()
-    }
-    try q.processAllAvailable() finally { q.stop(); deleteStaged(streamDir) }
-    graft.operators.EventOps.freshnessReport(spark.table(name))
+    graft.operators.EventOps.freshnessReport(
+      BoundedReplay.events(spark, dir, OutputMode.Complete) { stream =>
+        stream
+          .groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n_events"), max(col("ts")).as("last_ts"))
+      })
   }
 
   /** Gap sessionizer on Spark 4's transformWithState API (arbitrary
@@ -667,41 +459,19 @@ object EventStream {
   def sessionizeTwsOverFiles(spark: org.apache.spark.sql.SparkSession,
                              dir: String, gapMinutes: Int = 30): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types._
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val prevProvider = spark.conf.getOption(providerKey)
     spark.conf.set(providerKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val tsType = eventsTsType(spark, dir)
-      val batch = graft.Tables.events(spark, dir)
-      val maxUs = maxTsMicros(batch)
-      val sentinelUs = maxUs + (gapMinutes + 60L) * 60000000L
-      val sentinels = batch.select(col("user_id")).distinct()
-        .select((col("user_id") + 1000000000L).as("event_id"),
-          tsLit(sentinelUs, tsType).as("ts"),
-          col("user_id"), lit("flush").as("event_type"),
-          lit(0.0).as("value"), lit(null).cast("string").as("props"))
-      val streamDir = java.nio.file.Files.createTempDirectory("graft-tws-stream")
-      stageParquetCopy(java.nio.file.Path.of(s"$dir/events.parquet"),
-        streamDir, "events.parquet")
-      val tmp = stageSentinels(sentinels, streamDir, "graft-tws-sentinel")
-      val stream = openEventStream(spark, streamDir, tsType).as[Event]
-      val name = s"graft_stream_tws_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = withBoundedStateParallelism(spark) {
-        stream.groupByKey(_.user_id)
+      BoundedReplay.events(spark, dir, OutputMode.Append,
+          Some(flushSentinels(gapMinutes))) { stream =>
+        stream.as[Event].groupByKey(_.user_id)
           .transformWithState(new GapSessionProcessor(gapMinutes * 60000000L),
             org.apache.spark.sql.streaming.TimeMode.None(),
             OutputMode.Append())
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Append).start()
-      }
-      try q.processAllAvailable() finally {
-        q.stop(); deleteStaged(streamDir); deleteStaged(tmp)
-      }
-      spark.table(name)
-        .filter(unix_micros(col("session_start")) < sentinelUs)
-        .orderBy("user_id", "session_start")
+          .toDF()
+      }.orderBy("user_id", "session_start")
     } finally {
       prevProvider match {
         case Some(p) => spark.conf.set(providerKey, p)
@@ -725,33 +495,22 @@ object EventStream {
   def sessionizeOverFiles(spark: org.apache.spark.sql.SparkSession,
                           dir: String, gapMinutes: Int = 30): DataFrame = {
     import spark.implicits._
-    val tsType = eventsTsType(spark, dir)
-    val batch = graft.Tables.events(spark, dir)
-    val maxUs = maxTsMicros(batch)
-    val sentinelUs = maxUs + (gapMinutes + 60L) * 60000000L
-    val sentinels = batch.select(col("user_id")).distinct()
-      .select((col("user_id") + 1000000000L).as("event_id"),
-        tsLit(sentinelUs, tsType).as("ts"), // fixture's own ts encoding
-        col("user_id"), lit("flush").as("event_type"),
-        lit(0.0).as("value"), lit(null).cast("string").as("props"))
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-sess-stream")
-    stageParquetCopy(java.nio.file.Path.of(s"$dir/events.parquet"),
-      streamDir, "events.parquet")
-    val tmp = stageSentinels(sentinels, streamDir, "graft-sess-sentinel")
-    val stream = openEventStream(spark, streamDir, tsType).as[Event]
-    val name = s"graft_stream_sess_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = withBoundedStateParallelism(spark) {
-      sessionize(stream, gapMinutes)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).start()
-    }
-    try q.processAllAvailable() finally {
-      q.stop(); deleteStaged(streamDir); deleteStaged(tmp)
-    }
-    spark.table(name)
-      .filter(unix_micros(col("session_start")) < sentinelUs)
-      .orderBy("user_id", "session_start")
+    BoundedReplay.events(spark, dir, OutputMode.Append,
+        Some(flushSentinels(gapMinutes))) { stream =>
+      sessionize(stream.as[Event], gapMinutes).toDF()
+    }.orderBy("user_id", "session_start")
   }
+
+  /** One "flush" event per user, gap + 1 h after the last real event:
+    * it closes the user's trailing session in-batch. A session starting
+    * at the sentinel time is the sentinel's own and is filtered out. */
+  private def flushSentinels(gapMinutes: Int): BoundedReplay.Sentinels =
+    BoundedReplay.Sentinels((gapMinutes + 60L) * 60000000L,
+      (batch, ts) => batch.select(col("user_id")).distinct()
+        .select((col("user_id") + 1000000000L).as("event_id"), ts.as("ts"),
+          col("user_id"), lit("flush").as("event_type"),
+          lit(0.0).as("value"), lit(null).cast("string").as("props")),
+      sentinelUs => unix_micros(col("session_start")) < sentinelUs)
 
   /** Stream-stream interval join: every (error, click) pair for the
     * same user where the click lands within an hour of the error — the
@@ -787,7 +546,7 @@ object EventStream {
     * the four driver-oracled queries derive from ONE streaming run
     * instead of four — each run-to-completion pass pays per-micro-
     * batch state-store commits on four stores × partitions, which
-    * dominates a bounded replay (see [[withBoundedStateParallelism]]);
+    * dominates a bounded replay (see [[BoundedReplay]]);
     * sharing the pass cuts that cost 4×. Memoized per (session, dir);
     * the per-variant streaming operators stay available — composable
     * [[intervalJoin]] for unbounded production streams, and
@@ -817,8 +576,7 @@ object EventStream {
   private def sharedIntervalJoinFull(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     ijFullMemo.get(spark, dir) {
-      intervalJoinVariantOverFiles(spark, dir, "full_outer")
-        .filter(col("user_id") >= 0).localCheckpoint()
+      intervalJoinVariantOverFiles(spark, dir, "full_outer").localCheckpoint()
     }
 
   /** The interval join run to completion over the events table as a
@@ -833,37 +591,28 @@ object EventStream {
       .orderBy("user_id", "error_id", "click_id")
 
   /** Run ONE interval-join variant as its own streaming query over a
-    * staged bounded replay and return the raw (sentinel-included)
-    * result: the dedicated per-variant plan — four watermark-aged
+    * staged bounded replay and return its result: the dedicated per-variant plan — four watermark-aged
     * state stores per partition, emission driven by the global
     * watermark — used by the shared gate pass (full_outer) and by
     * StreamingSpec to prove each variant's own run matches its
     * derived view. Sentinels: outer/semi/full emission waits for the
     * min-over-both-sides watermark to pass a row's join bound, so a
     * bounded replay appends one far-future sentinel per side
-    * (negative user ids, joined to nobody — callers filter
-    * `user_id >= 0`); the inner variant emits matches as they meet
+    * (negative user ids, joined to nobody, filtered out of the
+    * result); the inner variant emits matches as they meet
     * and needs none, but tolerates them identically. */
   private[graft] def intervalJoinVariantOverFiles(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       joinType: String): DataFrame = {
-    val tsType = eventsTsType(spark, dir)
-    val batch = graft.Tables.events(spark, dir)
-    val maxUs = maxTsMicros(batch)
-    val sentinelUs = maxUs + 3L * 3600000000L
-    val sentinels = spark.range(2).toDF("i")
-      .select((col("i") + 3000000000L).as("event_id"),
-        tsLit(sentinelUs, tsType).as("ts"),
-        (-col("i") - 1L).as("user_id"),
-        when(col("i") === 0, "error").otherwise("click").as("event_type"),
-        lit(0.0).as("value"), lit(null).cast("string").as("props"))
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-ijv-stream")
-    stageParquetCopy(java.nio.file.Path.of(s"$dir/events.parquet"),
-      streamDir, "events.parquet")
-    val tmp = stageSentinels(sentinels, streamDir, "graft-ijv-sentinel")
-    val stream = openEventStream(spark, streamDir, tsType)
-    val name = s"graft_stream_ijv_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = withBoundedStateParallelism(spark) {
+    val sentinels = BoundedReplay.Sentinels(3L * 3600000000L,
+      (_, ts) => spark.range(2).toDF("i")
+        .select((col("i") + 3000000000L).as("event_id"), ts.as("ts"),
+          (-col("i") - 1L).as("user_id"),
+          when(col("i") === 0, "error").otherwise("click").as("event_type"),
+          lit(0.0).as("value"), lit(null).cast("string").as("props")),
+      _ => col("user_id") >= 0)
+    BoundedReplay.events(spark, dir, OutputMode.Append, Some(sentinels)) {
+        stream =>
       val e = stream.filter(col("event_type") === "error")
         .select(col("event_id").as("error_id"), col("user_id"),
           col("ts").as("error_ts"))
@@ -877,7 +626,7 @@ object EventStream {
           col("click_ts") >= col("error_ts") &&
           col("click_ts") <= col("error_ts") + expr("INTERVAL 1 HOUR"),
         joinType)
-      val out = joinType match {
+      joinType match {
         case "left_semi" => joined
         case "full_outer" => joined
           .select(coalesce(col("user_id"), col("click_user")).as("user_id"),
@@ -886,11 +635,7 @@ object EventStream {
           .select(col("user_id"), col("error_id"), col("click_id"),
             col("error_ts"), col("click_ts"))
       }
-      out.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).start()
     }
-    try q.processAllAvailable() finally { q.stop(); deleteStaged(streamDir); deleteStaged(tmp) }
-    spark.table(name)
   }
 
   def intervalJoinOverFilesOracle: String =

@@ -255,14 +255,14 @@ class HostileFixtureSpec extends SparkSpec {
     // a source dir with NO parquet files: the silent-zero-rows bug class
     val empty = java.nio.file.Files.createTempDirectory("graft_empty_src")
     intercept[IllegalArgumentException] {
-      graft.streaming.EventStream.stageParquetCopy(empty, stage, "x.parquet")
+      graft.streaming.BoundedReplay.stageParquetCopy(empty, stage, "x.parquet")
     }
     // a key=value partitioned source: flattening would drop the
     // partition columns' values — must refuse, not stage wrong data
     val part = java.nio.file.Files.createTempDirectory("graft_part_src")
     java.nio.file.Files.createDirectory(part.resolve("key=1"))
     intercept[IllegalArgumentException] {
-      graft.streaming.EventStream.stageParquetCopy(part, stage, "y.parquet")
+      graft.streaming.BoundedReplay.stageParquetCopy(part, stage, "y.parquet")
     }
   }
 

@@ -8,23 +8,6 @@ import graft.functions.BoundedTopK
 /** Native bounded top-k aggregate vs the window idiom, plus plan shape. */
 class TopKAggSpec extends SparkSpec {
 
-  test("bucketedGroupRanks equals the per-group window rank reference") {
-    import spark.implicits._
-    // seeded distinct values: ties would make per-row rank comparison
-    // ambiguous (both forms are correct up to tie permutation)
-    val rnd = new scala.util.Random(7)
-    val rows = rnd.shuffle((1 to 2000).toList).zipWithIndex.map {
-      case (v, i) => (s"g${i % 7}", v * 1.5)
-    }
-    val df = rows.toDF("g", "v")
-    val got = operators.Relational.bucketedGroupRanks(df)
-      .orderBy("g", "rk").collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
-    val w = Window.partitionBy("g").orderBy("v")
-    val want = df.withColumn("rk", row_number().over(w).cast("long"))
-      .orderBy("g", "rk").collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
-    assert(got.toSeq == want.toSeq)
-  }
-
   test("valuesAtGroupRanks fetches the window-rank values without a full sort") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
