@@ -69,106 +69,27 @@ object Bench {
       case qs if sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("reverse") => qs.reverse
       case qs => qs
     }
-    // The interval-join family (stream_interval_join*) derives from ONE
-    // memoized streaming pass (EventStream.sharedIntervalJoinFull); the
-    // per-query min-of-N would otherwise bill the pass to whichever
-    // family member runs its first iteration and then discard it. Charge
-    // it honestly: reset the memo, time ONE cold materialization as its
-    // own line, and let the four queries report their warm derived cost
-    // — the line plus the family sums to the true total.
-    val sharedPass: Seq[(String, Seq[Double])] =
-      if (ordered.map(_._1).exists(n =>
-            n.startsWith("stream_interval_join") && only.forall(_.contains(n)))) {
-        graft.streaming.EventStream.resetIntervalMemo()
+    // Trained state shared by several queries (TrainedState.all) would
+    // otherwise be built by whichever member runs first, in its
+    // iteration 1, and min-of-N would discard that cost, so the record
+    // would bill the build nowhere (r12 verdict item 3). Reset each state and time ONE
+    // cold build as its own line, in dependency order; the members then
+    // report warm serve-from-state cost, and a build line plus its
+    // members sum to the family's true total. A full run bills every
+    // state; a BENCH_ONLY subset bills a state only when its line is
+    // named (the dev loop keeps the warm-subset behavior).
+    val coldBuilds: Seq[(String, Seq[Double])] =
+      TrainedState.all.filter(st => only.forall(_.contains(st.line))).map { st =>
+        st.reset()
         val t0 = System.nanoTime()
         try {
-          graft.streaming.EventStream.primeSharedIntervalPass(spark, sfDir)
-          Seq(("stream_interval_shared_pass", Seq((System.nanoTime() - t0) / 1e9)))
+          st.prime(spark, sfDir)
+          (st.line, Seq((System.nanoTime() - t0) / 1e9))
         } catch { case e: Throwable =>
-          System.err.println(s"[bench] stream_interval_shared_pass failed: ${e.getMessage}")
-          Seq(("stream_interval_shared_pass", Seq.empty[Double]))
-        }
-      } else Seq.empty
-    // The near-dup pair-graph consumers (kcore/LPA/lsh_verified/sweep/
-    // groups) serve from ONE durable edges artifact; like the interval
-    // shared pass, the cold build must be billed as its own line, not
-    // to whichever consumer's first iteration hits a missing artifact.
-    // Reset (delete) the artifact, time one cold build+persist, and let
-    // the consumers report their warm load-only cost.
-    val edgesBuild: Seq[(String, Seq[Double])] =
-      if (ordered.map(_._1).exists(n =>
-            graft.ext.Dedup.edgesArtifactConsumers(n) && only.forall(_.contains(n)))) {
-        val t0 = System.nanoTime()
-        try {
-          graft.ext.Dedup.edgesArtifactReset(sfDir)
-          graft.ext.Dedup.edgesLoadOrBuild(spark, sfDir)
-          Seq(("dedup_edges_artifact_build", Seq((System.nanoTime() - t0) / 1e9)))
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] dedup_edges_artifact_build failed: ${e.getMessage}")
-          Seq(("dedup_edges_artifact_build", Seq.empty[Double]))
-        }
-      } else Seq.empty
-    // The remaining memo-served trained state (k-means centroids, the
-    // PQ codebook, the base-slice index, logit calibration, the BPE
-    // learner + its standing fold state, readiness state, standing
-    // dedup labels, the two IVM views) was never reset per run:
-    // whichever family member ran FIRST paid the training in its
-    // iteration 1 and min-of-N discarded it, so the record billed NO
-    // training anywhere — the same mis-billing class the two explicit
-    // cold lines above exist to prevent (r12 verdict item 3). Reset
-    // every memo and time ONE explicit cold build per family; the
-    // members then honestly report warm serve-from-state cost, and the
-    // build lines plus the members sum to each family's true total.
-    // Full runs always bill them; a BENCH_ONLY subset bills a family
-    // only when its build line is named (the dev loop keeps the old
-    // warm-subset behavior). Build order follows dependency: the
-    // standing dedup labels load the edges artifact the line above
-    // just rebuilt; readiness reads the same standing-label memo.
-    val memoBuilds: Seq[(String, Seq[Double])] = {
-      val families: Seq[(String, () => Unit, () => Unit)] = Seq(
-        ("kmeans_centroids_train_build",
-          // one reset drops all three slots of the ANN index family
-          () => graft.ext.Similarity.resetCentroidMemo(),
-          () => { graft.ext.Similarity.kmeansCentroids(spark, sfDir); () }),
-        ("pq_codebook_train_build", () => (),
-          () => { graft.ext.Similarity.pqCodebook(spark, sfDir); () }),
-        ("base_centroids_train_build", () => (),
-          () => { graft.ext.Similarity.baseKmeansCentroids(spark, sfDir); () }),
-        ("logit_calibration_train_build",
-          () => graft.ext.Learn.resetLogitMemo(),
-          () => graft.ext.Learn.warmLogitState(spark, sfDir)),
-        ("bpe_merges_train_build",
-          () => graft.ext.TextAnalysis.resetBpeMemo(),
-          () => graft.ext.TextAnalysis.warmBpeLearn(spark, sfDir)),
-        ("bpe_standing_state_build",
-          () => graft.ext.TextAnalysis.resetBpeStandingMemo(),
-          () => graft.ext.TextAnalysis.warmBpeStanding(spark, sfDir)),
-        ("dedup_standing_labels_build",
-          () => graft.ext.Dedup.resetStandingStateMemo(),
-          () => { graft.ext.Dedup.standingDedupState(spark, sfDir); () }),
-        ("readiness_state_build",
-          () => graft.ext.Pipeline.resetReadyStateMemo(),
-          () => { graft.ext.Pipeline.readyState(spark, sfDir); () }),
-        ("ivm_join_view_build",
-          () => graft.ext.Pipeline.resetJoinViewMemo(),
-          () => { graft.ext.Pipeline.joinViewState(spark, sfDir); () }),
-        ("ivm_cdc_view_build",
-          () => graft.ext.Pipeline.resetCdcViewMemo(),
-          () => { graft.ext.Pipeline.cdcViewState(spark, sfDir); () }))
-      families.flatMap { case (name, reset, prime) =>
-        if (!only.forall(_.contains(name))) None
-        else {
-          val t0 = System.nanoTime()
-          try {
-            reset(); prime()
-            Some((name, Seq((System.nanoTime() - t0) / 1e9)))
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            Some((name, Seq.empty[Double]))
-          }
+          System.err.println(s"[bench] ${st.line} failed: ${e.getMessage}")
+          (st.line, Seq.empty[Double])
         }
       }
-    }
     // Interference probe (sampled at each query iteration start): the
     // r7-r10 driver-session tripwires were all adjudicated as session
     // noise by re-measurement; recording 1-minute load average and JVM
@@ -215,7 +136,7 @@ object Bench {
       }
     }
     val queryFns = ordered.toMap
-    val results0 = sharedPass ++ edgesBuild ++ memoBuilds ++ ordered
+    val results0 = coldBuilds ++ ordered
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
         (name, (1 to iterations).flatMap(_ => timeOnce(name, fn)))
@@ -287,13 +208,12 @@ object Bench {
     // exceeds a threshold at record time, re-run JUST the tripwired
     // queries once more in-session, min-merge ONLY those, and disclose
     // the re-measurement in the record (`re_measured`) — bounding the
-    // damage one bad wall-clock window can do. The two deliberate
+    // damage one bad wall-clock window can do. The deliberate
     // cold-build lines are exempt: re-running them warm would falsify
     // the very cost they exist to bill.
     val healThreshold =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_HEAL_THRESHOLD", "6").toInt
-    val coldLines = Set("stream_interval_shared_pass", "dedup_edges_artifact_build") ++
-      memoBuilds.map(_._1)
+    val coldLines = TrainedState.all.map(_.line).toSet
     val (movers0, flags0) = computeMovers(bestOf(results0))
     val healable = movers0.map(_._1).filterNot(coldLines).filter(queryFns.contains)
     val (results, reMeasured) =
@@ -311,14 +231,12 @@ object Bench {
     val total = results.flatMap(_._2.minOption).sum
     val (movers, staleFlags) = computeMovers(best)
 
-    // a failed shared-pass prime means the four interval queries each
-    // absorbed the cold streaming pass into their first iteration and
-    // min-of-N hid it — flag the contamination instead of letting the
-    // mis-billing pass silently
-    val coldFlags: Seq[String] =
-      if (sharedPass.exists(_._2.isEmpty))
-        Seq("\"interval_family_cold_contaminated:prime_failed\"")
-      else Seq.empty
+    // a failed cold build means its family's members each absorbed the
+    // build into their first iteration and min-of-N hid it — flag the
+    // contamination instead of letting the mis-billing pass silently
+    val coldFlags: Seq[String] = coldBuilds.collect {
+      case (line, ts) if ts.isEmpty => "\"" + line + ":prime_failed\""
+    }
 
     // Machine-speed context for each mover: its own window's best
     // canary vs the session median canary. A mover whose canary ratio

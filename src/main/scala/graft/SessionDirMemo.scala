@@ -8,8 +8,9 @@ import org.apache.spark.sql.SparkSession
   * pass. ONE entry is ever retained (a different key evicts, never
   * accumulates), a stopped session's entry is dropped on sight
   * (releasing the session graph rather than pinning it), and
-  * `reset()` gives harnesses that must time COLD runs (ScaleProbe) an
-  * explicit invalidation hook.
+  * `reset()` gives harnesses that must time COLD runs (Bench's
+  * cold-build lines, ScaleProbe) an explicit invalidation hook. Each
+  * memo owns its build function and is one [[TrainedState]].
   *
   * Staleness: the key includes a fingerprint of the directory's file
   * metadata (relative path, size, mtime of every regular file), so
@@ -22,6 +23,9 @@ import org.apache.spark.sql.SparkSession
   * can't walk (hdfs://, s3://) fingerprint as 0 and fall back to the
   * path-only key. */
 private[graft] object SessionDirMemo {
+  def apply[T](line: String)(build: (SparkSession, String) => T): SessionDirMemo[T] =
+    new SessionDirMemo(line)(build)
+
   /** Metadata fingerprint of a fixture directory (see class doc).
     * Shared by the memo keys, the durable ANN index artifact's
     * staleness check, and Bench's baseline-vintage stamp. */
@@ -46,10 +50,11 @@ private[graft] object SessionDirMemo {
   }
 }
 
-private[graft] final class SessionDirMemo[T] {
+private[graft] final class SessionDirMemo[T](val line: String)(
+    build: (SparkSession, String) => T) extends TrainedState {
   @volatile private var slot: Option[((SparkSession, String, Long), T)] = None
 
-  def get(spark: SparkSession, dir: String)(compute: => T): T = synchronized {
+  def get(spark: SparkSession, dir: String): T = synchronized {
     val key = (spark, dir, SessionDirMemo.fingerprint(dir))
     slot match {
       case Some((k, v)) if k == key && !spark.sparkContext.isStopped => v
@@ -57,7 +62,7 @@ private[graft] final class SessionDirMemo[T] {
         // drop a dead session's entry even when the incoming key
         // differs — the whole point is not to pin stopped sessions
         if (other.exists(_._1._1.sparkContext.isStopped)) slot = None
-        val v = compute
+        val v = build(spark, dir)
         slot = Some((key, v))
         v
     }
@@ -70,4 +75,6 @@ private[graft] final class SessionDirMemo[T] {
   }
 
   def reset(): Unit = synchronized { slot = None }
+
+  def prime(spark: SparkSession, dir: String): Unit = { get(spark, dir); () }
 }

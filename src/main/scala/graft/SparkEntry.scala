@@ -47,20 +47,25 @@ object SparkEntry {
     // multi-part TSV sink with `<outputKey>-reduce-<i>` renames
     // (A7/A8), then the renamed parts read back as the result — so the
     // oracle hash verifies the full job→sink→files→parse loop, not
-    // just the in-memory frame
+    // just the in-memory frame. The parsed parts (one row per distinct
+    // token) are collected into a local frame so the sink directory
+    // can be deleted before the result is returned.
     "mr_token_docfreq" -> ((s, dir) => {
       import s.implicits._
       val input = Tables.documents(s, dir)
         .select(col("doc_id").cast("string"), col("text")).as[(String, String)]
       val job = MapReduce.runJob(input, "inverted_index", "distinct_count",
         numPartitions = Some(4))
-      val out = java.nio.file.Files.createTempDirectory("graft-mr-df")
-        .toString + "/out"
-      MapReduce.writeTsv(job, out, single = false, outputKey = Some("docfreq"))
-      s.read.text(out + "/docfreq-reduce-*")
-        .select(split(col("value"), "\t").getItem(0).as("key"),
-          split(col("value"), "\t").getItem(1).as("value"))
-        .orderBy("key")
+      val work = java.nio.file.Files.createTempDirectory("graft-mr-df")
+      try {
+        val out = work.toString + "/out"
+        MapReduce.writeTsv(job, out, single = false, outputKey = Some("docfreq"))
+        val parsed = s.read.text(out + "/docfreq-reduce-*")
+          .select(split(col("value"), "\t").getItem(0).as("key"),
+            split(col("value"), "\t").getItem(1).as("value"))
+          .orderBy("key")
+        s.createDataFrame(java.util.Arrays.asList(parsed.collect(): _*), parsed.schema)
+      } finally graft.streaming.BoundedReplay.deleteStaged(work)
     }),
     // prefix listing (S7/P2/F8)
     "list_prefix" -> ((s, dir) =>

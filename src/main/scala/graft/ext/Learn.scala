@@ -342,21 +342,13 @@ object Learn {
   // (session, corpus), the kmeansCentroids/pqCodebook memo discipline;
   // ScaleProbe resets it so probe timings stay honest cold runs
   // including the stats pass and training
-  private val logitMemo = new graft.SessionDirMemo[
-    ((Long, Double, Double, Double, Double), (Double, Double, Double))]
-
-  private[graft] def resetLogitMemo(): Unit = logitMemo.reset()
-
-  /** Bench/probe hook: train (or re-read) the logit state untimed by
-    * its consumers, so the harness can bill the training as its own
-    * explicit cold line. */
-  private[graft] def warmLogitState(spark: SparkSession, dir: String): Unit = {
-    logitState(spark, dir); ()
-  }
-
   private def logitState(spark: SparkSession, dir: String)
       : ((Long, Double, Double, Double, Double), (Double, Double, Double)) =
-    logitMemo.get(spark, dir) {
+    logitMemo.get(spark, dir)
+
+  private[graft] val logitMemo = graft.SessionDirMemo[
+      ((Long, Double, Double, Double, Double), (Double, Double, Double))](
+      "logit_calibration_train_build") { (spark, dir) =>
       val st = logitStatsRow(spark, dir)
       // training reads the BOUNDED hash-thresholded sample
       // (LogitTrainCap; keep iff shash < 2³²/stride, stride literal

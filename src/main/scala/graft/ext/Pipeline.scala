@@ -298,9 +298,6 @@ object Pipeline {
       evalNg: DataFrame, trainNgIdx: DataFrame, contamNgBase: DataFrame,
       evalSs: DataFrame, trainSsIdx: DataFrame, contamSsBase: DataFrame)
 
-  private val readyStateMemo = new graft.SessionDirMemo[ReadyState]
-  private[graft] def resetReadyStateMemo(): Unit = readyStateMemo.reset()
-
   private def isDeltaId(c: Column): Column =
     c % Dedup.DeltaMod === (Dedup.DeltaMod - 1)
 
@@ -312,7 +309,10 @@ object Pipeline {
       regexp_count(col("text"), lit(pat)).cast("long") }.reduce(_ + _) > 0
 
   private[graft] def readyState(spark: SparkSession, dir: String): ReadyState =
-    readyStateMemo.get(spark, dir) {
+    readyStateMemo.get(spark, dir)
+
+  private[graft] val readyStateMemo =
+    graft.SessionDirMemo[ReadyState]("readiness_state_build") { (spark, dir) =>
       val ev = TextAnalysis.EvalSource
       val base = Tables.documents(spark, dir)
         .filter(!isDeltaId(col("doc_id")))
@@ -671,9 +671,6 @@ object Pipeline {
   private[graft] final case class JoinViewState(
       view: DataFrame, baseOrders: DataFrame, baseCust: DataFrame)
 
-  private val joinViewMemo = new graft.SessionDirMemo[JoinViewState]
-  private[graft] def resetJoinViewMemo(): Unit = joinViewMemo.reset()
-
   /** The view definition — ONE place, shared by bootstrap and every
     * fold term, so the maintained view cannot drift from its spec. */
   private def enrichJoin(o: DataFrame, c: DataFrame): DataFrame =
@@ -683,7 +680,10 @@ object Pipeline {
 
   private[graft] def joinViewState(spark: SparkSession,
                                    dir: String): JoinViewState =
-    joinViewMemo.get(spark, dir) {
+    joinViewMemo.get(spark, dir)
+
+  private[graft] val joinViewMemo =
+    graft.SessionDirMemo[JoinViewState]("ivm_join_view_build") { (spark, dir) =>
       val bo = ordersSlim(spark, dir)
         .filter(!isDeltaId(col("o_orderkey"))).localCheckpoint()
       val bc = custSlim(spark, dir)
@@ -771,12 +771,12 @@ object Pipeline {
   /** Standing state for the CDC view: the FULL materialized join (the
     * lake's current view — CDC modifies in place, unlike the
     * insert-only form whose base excludes the future delta). */
-  private val cdcViewMemo = new graft.SessionDirMemo[JoinViewState]
-  private[graft] def resetCdcViewMemo(): Unit = cdcViewMemo.reset()
-
   private[graft] def cdcViewState(spark: SparkSession,
                                   dir: String): JoinViewState =
-    cdcViewMemo.get(spark, dir) {
+    cdcViewMemo.get(spark, dir)
+
+  private[graft] val cdcViewMemo =
+    graft.SessionDirMemo[JoinViewState]("ivm_cdc_view_build") { (spark, dir) =>
       val ao = ordersSlim(spark, dir).localCheckpoint()
       val ac = custSlim(spark, dir).localCheckpoint()
       JoinViewState(enrichJoin(ao, ac).localCheckpoint(), ao, ac)

@@ -423,16 +423,11 @@ object Similarity {
   // slot (≤ MaxLists × dim doubles ≈ 2 MB); invalidation rules live in
   // graft.SessionDirMemo; ScaleProbe resets it so probe timings stay
   // honest COLD runs including training.
-  private val centroidMemo = new graft.SessionDirMemo[Seq[(Long, Seq[Double])]]
-
-  private[graft] def resetCentroidMemo(): Unit = {
-    centroidMemo.reset()
-    pqMemo.reset() // the PQ codebook is trained state of the same kind
-    baseCentroidMemo.reset() // the standing (base-trained) index too
-  }
+  private[graft] val centroidMemo =
+    graft.SessionDirMemo("kmeans_centroids_train_build")(kmeansCentroidsUncached)
 
   private[graft] def kmeansCentroids(spark: SparkSession, dir: String): Seq[(Long, Seq[Double])] =
-    centroidMemo.get(spark, dir)(kmeansCentroidsUncached(spark, dir))
+    centroidMemo.get(spark, dir)
 
   /** Times each trainer ACTUALLY ran in this JVM — the observable that
     * lets the artifact tests assert "the second session reused the
@@ -858,12 +853,12 @@ object Similarity {
     * base slice has holes). Memoized separately from the full-corpus
     * centroids: a standing index IS trained state, loaded, not
     * rebuilt, on every maintenance tick. */
-  private val baseCentroidMemo =
-    new graft.SessionDirMemo[Seq[(Long, Seq[Double])]]
+  private[graft] val baseCentroidMemo =
+    graft.SessionDirMemo("base_centroids_train_build")(baseKmeansCentroidsUncached)
 
   private[graft] def baseKmeansCentroids(
       spark: SparkSession, dir: String): Seq[(Long, Seq[Double])] =
-    baseCentroidMemo.get(spark, dir)(baseKmeansCentroidsUncached(spark, dir))
+    baseCentroidMemo.get(spark, dir)
 
   private def baseKmeansCentroidsUncached(
       spark: SparkSession, dir: String): Seq[(Long, Seq[Double])] = {
@@ -2531,10 +2526,11 @@ object Similarity {
   // and sim_ann_ivfpq all derive the identical codebook from the same
   // corpus — one slot of 8×16×8 doubles; ScaleProbe resets it so probe
   // timings stay honest cold runs including training.
-  private val pqMemo = new graft.SessionDirMemo[Seq[(Int, Int, Seq[Double])]]
+  private[graft] val pqMemo =
+    graft.SessionDirMemo("pq_codebook_train_build")(pqCodebookUncached)
 
   private[graft] def pqCodebook(spark: SparkSession, dir: String): Seq[(Int, Int, Seq[Double])] =
-    pqMemo.get(spark, dir)(pqCodebookUncached(spark, dir))
+    pqMemo.get(spark, dir)
 
   private def pqCodebookUncached(spark: SparkSession, dir: String): Seq[(Int, Int, Seq[Double])] = {
     pqTrainCount.incrementAndGet()

@@ -2080,23 +2080,15 @@ object TextAnalysis {
   // queries (merges, encode, fertility) — one slot per (session,
   // corpus), the kmeansCentroids/logitWeights memo discipline; the
   // held frames are localCheckpoint'd so replay never re-trains
-  private val bpeMemo = new graft.SessionDirMemo[(Seq[DataFrame], DataFrame)]
-
-  private[graft] def resetBpeMemo(): Unit = bpeMemo.reset()
-
-  /** Bench/probe hook: run (or re-read) the shared BPE learner untimed
-    * by its consumers, so the harness can bill the merge training as
-    * its own explicit cold line. */
-  private[graft] def warmBpeLearn(spark: SparkSession, dir: String): Unit = {
-    bpeLearn(spark, dir); ()
-  }
+  private[graft] val bpeMemo =
+    graft.SessionDirMemo("bpe_merges_train_build")(bpeLearnUncached)
 
   /** Shared BPE learner: the merge table per round plus the final
     * symbol representation of every vocabulary word after all
     * [[BpeMerges]] rounds (see [[bpeMerges]] for the algorithm notes). */
   private def bpeLearn(spark: SparkSession,
                        dir: String): (Seq[DataFrame], DataFrame) =
-    bpeMemo.get(spark, dir) { bpeLearnUncached(spark, dir) }
+    bpeMemo.get(spark, dir)
 
   /** Merge-TRAINING corpus bound: pair statistics come from a
     * deterministic strided document sample of ≤ ~this many docs
@@ -2402,23 +2394,16 @@ object TextAnalysis {
     * fold reads (localCheckpoint'd; |vocab|-granularity — in
     * production these are maintained tables, exactly the
     * [[graft.ext.Dedup.standingDedupState]] memo discipline). */
-  private final case class BpeStanding(
+  private[graft] final case class BpeStanding(
       bests: Seq[Option[(String, Long)]],
       pairTables: Seq[DataFrame],
       reps: Seq[DataFrame])
 
-  private val bpeStandingMemo = new graft.SessionDirMemo[BpeStanding]
-
-  private[graft] def resetBpeStandingMemo(): Unit = bpeStandingMemo.reset()
-
-  /** Probe hook: build (or re-read) the standing state untimed, so a
-    * `_fold` probe times only the maintenance tick. */
-  private[graft] def warmBpeStanding(spark: SparkSession, dir: String): Unit = {
-    bpeStanding(spark, dir); ()
-  }
-
   private def bpeStanding(spark: SparkSession, dir: String): BpeStanding =
-    bpeStandingMemo.get(spark, dir) {
+    bpeStandingMemo.get(spark, dir)
+
+  private[graft] val bpeStandingMemo =
+    graft.SessionDirMemo[BpeStanding]("bpe_standing_state_build") { (spark, dir) =>
       val m = Dedup.DeltaMod
       val base = Tables.documents(spark, dir)
         .filter(col("doc_id") % m =!= (m - 1))

@@ -557,27 +557,14 @@ object EventStream {
   // exactly one checkpointed frame is ever retained; the gate and
   // bench run the four interval queries consecutively per dir, so one
   // slot captures the whole win.
-  private val ijFullMemo = new graft.SessionDirMemo[DataFrame]
-
-  /** Drop the shared interval-join pass so the next family member pays
-    * the full streaming cost — the cold-probe discipline ScaleProbe
-    * applies to trained state, here applied by graft.Bench before it
-    * times the pass as its own line (so the four derived queries'
-    * warm numbers plus the pass line sum to the family's true cost). */
-  private[graft] def resetIntervalMemo(): Unit = ijFullMemo.reset()
-
-  /** Materialize the shared full-outer pass for `dir`, populating the
-    * memo, and return its row count — the action graft.Bench times as
-    * the interval family's one-time shared cost. */
-  private[graft] def primeSharedIntervalPass(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Long =
-    sharedIntervalJoinFull(spark, dir).count()
+  private[graft] val ijFullMemo =
+    graft.SessionDirMemo[DataFrame]("stream_interval_shared_pass") { (spark, dir) =>
+      intervalJoinVariantOverFiles(spark, dir, "full_outer").localCheckpoint()
+    }
 
   private def sharedIntervalJoinFull(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    ijFullMemo.get(spark, dir) {
-      intervalJoinVariantOverFiles(spark, dir, "full_outer").localCheckpoint()
-    }
+    ijFullMemo.get(spark, dir)
 
   /** The interval join run to completion over the events table as a
     * bounded file stream — driver-oracled like the other streaming

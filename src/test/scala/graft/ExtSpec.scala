@@ -151,7 +151,7 @@ class ExtSpec extends SparkSpec {
   }
 
   test("incremental groups: delta fold equals from-scratch resolution, touched set is exact") {
-    Dedup.resetStandingStateMemo()
+    Dedup.standingStateMemo.reset()
     val delta = Dedup.dedupGroupsDelta(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2), r.getBoolean(3)))
     val full = Dedup.duplicateGroups(spark, sf0001).collect()
@@ -194,8 +194,8 @@ class ExtSpec extends SparkSpec {
   }
 
   test("incremental readiness: delta gate equals batch gate row-for-row") {
-    graft.ext.Pipeline.resetReadyStateMemo()
-    Dedup.resetStandingStateMemo()
+    graft.ext.Pipeline.readyStateMemo.reset()
+    Dedup.standingStateMemo.reset()
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getBoolean(3)))
     val batch = rows(graft.ext.Pipeline.trainingReadiness(spark, sf0001))
@@ -212,7 +212,7 @@ class ExtSpec extends SparkSpec {
     // by tick (each fold's output is the next fold's input), and K
     // sequential folds land on exactly the from-scratch labels — an
     // edge joins the fold of the tick its LATEST endpoint arrives in
-    Dedup.resetStandingStateMemo()
+    Dedup.standingStateMemo.reset()
     // sf0.01, not sf0.001: the tick split needs delta edges in BOTH
     // id-decade parities, which the 500-doc fixture doesn't produce
     val dir = "/root/testdata/sf0.01"
@@ -246,7 +246,7 @@ class ExtSpec extends SparkSpec {
     // the production property, join-shaped: the materialized view
     // ADVANCES tick by tick under two-sided deltas, and K folds land
     // exactly on the from-scratch join of everything ingested so far
-    graft.ext.Pipeline.resetJoinViewMemo()
+    graft.ext.Pipeline.joinViewMemo.reset()
     val dir = "/root/testdata/sf0.01" // both id-decade parities needed
     val o = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -286,7 +286,7 @@ class ExtSpec extends SparkSpec {
   }
 
   test("CDC-join IVM: signed folds retract exactly and compose across ticks") {
-    graft.ext.Pipeline.resetCdcViewMemo()
+    graft.ext.Pipeline.cdcViewMemo.reset()
     val dir = "/root/testdata/sf0.01"
     def viewMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) ->
@@ -332,7 +332,7 @@ class ExtSpec extends SparkSpec {
     val q1 = graft.ext.Pipeline.ivmJoinCdc(spark, dir).collect()
     val q2 = graft.ext.Pipeline.ivmJoinCdc(spark, dir).collect()
     assert(q1.sameElements(q2))
-    graft.ext.Pipeline.resetCdcViewMemo()
+    graft.ext.Pipeline.cdcViewMemo.reset()
   }
 
   test("threshold sweep: confusion counts are coherent and monotone in tau") {
@@ -386,8 +386,8 @@ class ExtSpec extends SparkSpec {
   }
 
   test("incremental BPE fold equals the from-scratch learner, memo replays stably") {
-    TextAnalysis.resetBpeMemo()
-    TextAnalysis.resetBpeStandingMemo()
+    TextAnalysis.bpeMemo.reset()
+    TextAnalysis.bpeStandingMemo.reset()
     def noFold(rs: Array[org.apache.spark.sql.Row]) = rs
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
       .sortBy(_._1).toSeq
@@ -399,8 +399,8 @@ class ExtSpec extends SparkSpec {
     // bit-identically, folded flags included
     val again = TextAnalysis.bpeMergesDelta(spark, sf0001).collect()
     assert(delta.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq)
-    TextAnalysis.resetBpeMemo()
-    TextAnalysis.resetBpeStandingMemo()
+    TextAnalysis.bpeMemo.reset()
+    TextAnalysis.bpeStandingMemo.reset()
   }
 
   test("operating curves + session examples keep their structural contracts") {
@@ -1151,15 +1151,18 @@ class ExtSpec extends SparkSpec {
   test("ANN index artifact: a fresh session reuses the stored index without retraining; stale vintage retrains") {
     val path = java.nio.file.Files
       .createTempDirectory("graft-ann-index").toString + "/idx"
+    // a "new session": the three ANN index memos are empty
+    def resetIndexMemos(): Unit = Seq(Similarity.centroidMemo,
+      Similarity.pqMemo, Similarity.baseCentroidMemo).foreach(_.reset())
     // first session: trains through the memos and writes the artifact
-    Similarity.resetCentroidMemo()
+    resetIndexMemos()
     assert(!Similarity.annIndexLoadOrTrain(spark, sf0001, path),
       "no artifact yet - must train")
     val trainedCents = Similarity.kmeansCentroids(spark, sf0001)
     val t0 = Similarity.centroidTrainCount.get()
     val p0 = Similarity.pqTrainCount.get()
     // "second session": the memos are gone, the artifact is not
-    Similarity.resetCentroidMemo()
+    resetIndexMemos()
     assert(Similarity.annIndexLoadOrTrain(spark, sf0001, path),
       "fresh artifact must be reused")
     assert(Similarity.centroidTrainCount.get() == t0
@@ -1178,21 +1181,21 @@ class ExtSpec extends SparkSpec {
     spark.read.parquet(path)
       .withColumn("fingerprint", lit(0L))
       .write.mode("overwrite").parquet(tampered)
-    Similarity.resetCentroidMemo()
+    resetIndexMemos()
     assert(!Similarity.annIndexLoadOrTrain(spark, sf0001, tampered),
       "stale artifact must be rejected")
     assert(Similarity.centroidTrainCount.get() == t0 + 1,
       "stale path must retrain")
     // the rewrite healed the artifact: next load reuses it
-    Similarity.resetCentroidMemo()
+    resetIndexMemos()
     assert(Similarity.annIndexLoadOrTrain(spark, sf0001, tampered))
   }
 
   test("near-dup edges artifact: consumers serve from the stored graph with zero LSH builds; stale vintage rebuilds") {
-    Dedup.edgesArtifactReset(sf0001)
+    Dedup.edgesArtifact.reset()
     val recompute = Dedup.lshVerifiedJaccard(spark, sf0001).collect().toSeq
     val b0 = Dedup.edgesBuildCount.get()
-    // first touch of a missing artifact builds + persists exactly once
+    // first touch of a reset artifact builds + persists exactly once
     val viaArtifact = Dedup.lshVerifiedFromArtifact(spark, sf0001)
       .collect().toSeq
     assert(Dedup.edgesBuildCount.get() == b0 + 1, "first touch builds once")
@@ -1213,7 +1216,7 @@ class ExtSpec extends SparkSpec {
     val tamperDir = path + ".tamper"
     spark.read.parquet(path).withColumn("fingerprint", lit(0L))
       .write.mode("overwrite").parquet(tamperDir)
-    Dedup.edgesArtifactReset(sf0001)
+    graft.streaming.BoundedReplay.deleteStaged(java.nio.file.Paths.get(path))
     assert(new java.io.File(tamperDir).renameTo(new java.io.File(path)))
     val b2 = Dedup.edgesBuildCount.get()
     assert(Dedup.lshVerifiedFromArtifact(spark, sf0001).collect().toSeq
@@ -1232,7 +1235,7 @@ class ExtSpec extends SparkSpec {
     // invariance that justifies the sharing — signatures and band keys
     // are per-doc, so filtering the banded frame to the keeper subset
     // yields exactly the pairs of banding that subset from scratch
-    Dedup.edgesArtifactReset(sf0001)
+    Dedup.edgesArtifact.reset()
     val shared = Dedup.verifiedPairsShared(spark, sf0001) // forces a build
       .select("d1", "d2", "est_jaccard").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet

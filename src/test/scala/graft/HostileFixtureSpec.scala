@@ -251,19 +251,22 @@ class HostileFixtureSpec extends SparkSpec {
   }
 
   test("staging refuses an empty or partitioned source instead of replaying zero rows") {
+    import graft.streaming.BoundedReplay
     val stage = java.nio.file.Files.createTempDirectory("graft_stage_dst")
     // a source dir with NO parquet files: the silent-zero-rows bug class
     val empty = java.nio.file.Files.createTempDirectory("graft_empty_src")
-    intercept[IllegalArgumentException] {
-      graft.streaming.BoundedReplay.stageParquetCopy(empty, stage, "x.parquet")
-    }
-    // a key=value partitioned source: flattening would drop the
-    // partition columns' values — must refuse, not stage wrong data
     val part = java.nio.file.Files.createTempDirectory("graft_part_src")
-    java.nio.file.Files.createDirectory(part.resolve("key=1"))
-    intercept[IllegalArgumentException] {
-      graft.streaming.BoundedReplay.stageParquetCopy(part, stage, "y.parquet")
-    }
+    try {
+      intercept[IllegalArgumentException] {
+        BoundedReplay.stageParquetCopy(empty, stage, "x.parquet")
+      }
+      // a key=value partitioned source: flattening would drop the
+      // partition columns' values — must refuse, not stage wrong data
+      java.nio.file.Files.createDirectory(part.resolve("key=1"))
+      intercept[IllegalArgumentException] {
+        BoundedReplay.stageParquetCopy(part, stage, "y.parquet")
+      }
+    } finally Seq(stage, empty, part).foreach(BoundedReplay.deleteStaged)
   }
 
   test("containment: the mega-cluster collapses to keepers and stays pair-bounded") {
@@ -923,7 +926,7 @@ class HostileFixtureSpec extends SparkSpec {
         .write.mode("overwrite").parquet(s"$out/documents.parquet")
       marker.getParentFile.mkdirs(); marker.createNewFile()
     }
-    graft.ext.TextAnalysis.resetBpeMemo()
+    graft.ext.TextAnalysis.bpeMemo.reset()
     val rows = graft.ext.TextAnalysis.bpeMergeCurve(spark, out).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(_._1)
@@ -942,7 +945,7 @@ class HostileFixtureSpec extends SparkSpec {
     // word is 1 symbol — the floor; the tail of the curve sits ON it
     assert(rows.last._4 == rows.last._2,
       s"exhausted curve must reach 1 symbol/word: ${rows.last}")
-    graft.ext.TextAnalysis.resetBpeMemo() // don't leak the tiny learner
+    graft.ext.TextAnalysis.bpeMemo.reset() // don't leak the tiny learner
   }
 
   test("incremental BPE: divergence mid-table folds the prefix and cascades the tail") {
@@ -968,8 +971,8 @@ class HostileFixtureSpec extends SparkSpec {
         .write.mode("overwrite").parquet(s"$out/documents.parquet")
       marker.getParentFile.mkdirs(); marker.createNewFile()
     }
-    graft.ext.TextAnalysis.resetBpeMemo()
-    graft.ext.TextAnalysis.resetBpeStandingMemo()
+    graft.ext.TextAnalysis.bpeMemo.reset()
+    graft.ext.TextAnalysis.bpeStandingMemo.reset()
     val folded = graft.ext.TextAnalysis.bpeMergesDelta(spark, out).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(3), r.getBoolean(4)))
       .sortBy(_._1)
@@ -983,8 +986,8 @@ class HostileFixtureSpec extends SparkSpec {
     val scratch = graft.ext.TextAnalysis.bpeMerges(spark, out).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(3))).sortBy(_._1)
     assert(scratch.toSeq == folded.map(x => (x._1, x._2, x._3)).toSeq)
-    graft.ext.TextAnalysis.resetBpeMemo()
-    graft.ext.TextAnalysis.resetBpeStandingMemo()
+    graft.ext.TextAnalysis.bpeMemo.reset()
+    graft.ext.TextAnalysis.bpeStandingMemo.reset()
   }
 
   test("session examples: single-event sessions emit nothing, first targets carry 1-token context") {
@@ -1010,8 +1013,8 @@ class HostileFixtureSpec extends SparkSpec {
     // the strongest convergence evidence: the mega-cluster + empty
     // events + gramless docs corpus, where every standing/delta
     // boundary shape appears at once
-    graft.ext.Dedup.resetStandingStateMemo()
-    graft.ext.Pipeline.resetReadyStateMemo()
+    graft.ext.Dedup.standingStateMemo.reset()
+    graft.ext.Pipeline.readyStateMemo.reset()
     val full = graft.ext.Dedup.duplicateGroups(spark, hostileDir).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val delta = graft.ext.Dedup.dedupGroupsDelta(spark, hostileDir).collect()

@@ -75,7 +75,7 @@ class StreamingSpec extends SparkSpec {
     val dirs0 = stagingDirs()
     val lines = SparkEntry.queries.toSeq.filter(_._1.startsWith("stream_"))
     assert(lines.size == 30)
-    EventStream.resetIntervalMemo()
+    EventStream.ijFullMemo.reset()
     for (pass <- 1 to 2; (name, build) <- lines) {
       build(spark, sf0001).collect()
       val run = s"$name (pass $pass)"
@@ -252,8 +252,8 @@ class StreamingSpec extends SparkSpec {
   test("streaming readiness gate equals the batch gate row-for-row") {
     // the three execution forms (batch gate, batch delta gate, stream)
     // must emit bit-identical verdict rows — they register one oracle
-    graft.ext.Pipeline.resetReadyStateMemo()
-    graft.ext.Dedup.resetStandingStateMemo()
+    graft.ext.Pipeline.readyStateMemo.reset()
+    graft.ext.Dedup.standingStateMemo.reset()
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2),
         r.getBoolean(3)))
@@ -302,80 +302,14 @@ class StreamingSpec extends SparkSpec {
     // process memory).
     import org.apache.spark.sql.DataFrame
     val work = java.nio.file.Files.createTempDirectory("graft-ckpt")
-    val streamDir = work.resolve("in")
-    java.nio.file.Files.createDirectories(streamDir)
-    val ckpt = work.resolve("ckpt").toString
-    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-    val schema = docs.schema
-    // stage one parquet FILE per ingest batch (FileStreamSource tails
-    // files in a directory, not nested dirs)
-    def stage(df: DataFrame, n: String): Long = {
-      val tmp = work.resolve(n + ".tmp")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, streamDir.resolve(n + ".parquet"))
-      df.count()
-    }
-    // the maintained state: per-source document and char totals (the
-    // ingest-monitor shape; every source spans both halves, so run-2
-    // totals are only correct if run-1 state was resumed)
-    val upserts = scala.collection.mutable.Map[String, (Long, Long)]()
-    val sink: (DataFrame, Long) => Unit = (batch, _) =>
-      batch.collect().foreach(r =>
-        upserts(r.getString(0)) = (r.getLong(1), r.getLong(2)))
-    def runOnce(): Long = {
-      val q = spark.readStream.schema(schema).parquet(streamDir.toString)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"))
-        .writeStream.outputMode(OutputMode.Update)
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(sink)
-        .start()
-      try { q.processAllAvailable(); q.recentProgress.map(_.numInputRows).sum }
-      finally q.stop()
-    }
-    val n1 = stage(docs.filter(col("doc_id") % 2 === 0), "b1")
-    assert(runOnce() == n1, "first session reads the first batch")
-    // the query is now STOPPED (the kill); new data lands while down
-    val n2 = stage(docs.filter(col("doc_id") % 2 === 1), "b2")
-    val in2 = runOnce()
-    assert(in2 == n2,
-      s"resumed session must process ONLY the new batch: read $in2 rows, new batch has $n2 (a full re-read would be ${n1 + n2})")
-    // state survived: run 2 saw half the corpus yet the upserted view
-    // carries FULL totals for every source
-    val expect = docs.groupBy(col("source"))
-      .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("c"))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(upserts.toMap == expect,
-      s"resumed state must merge both batches: got $upserts want $expect")
-    // checkpoint size vs state rows (SCALE.md operational note)
-    def du(f: java.io.File): Long =
-      if (f.isFile) f.length
-      else Option(f.listFiles()).getOrElse(Array.empty).map(du).sum
-    info(s"checkpoint bytes=${du(new java.io.File(ckpt))} state_rows=${expect.size}")
-  }
-
-  test("checkpoint kill/resume under the RocksDB state store provider") {
-    // The HDFS-provider test above proves the restart path for the
-    // default store; the transformWithState family REQUIRES RocksDB
-    // (EventStream.sessionizeTwsOverFiles pins the provider), and
-    // RocksDB's checkpoint layout differs — changelog/SST files plus
-    // zip'd snapshots instead of per-version delta files — so its
-    // resume path must be proven separately: this is the provider the
-    // operational story actually ships on for custom-state pipelines.
-    import org.apache.spark.sql.DataFrame
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val work = java.nio.file.Files.createTempDirectory("graft-ckpt-rocks")
       val streamDir = work.resolve("in")
       java.nio.file.Files.createDirectories(streamDir)
       val ckpt = work.resolve("ckpt").toString
       val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       val schema = docs.schema
+      // stage one parquet FILE per ingest batch (FileStreamSource tails
+      // files in a directory, not nested dirs)
       def stage(df: DataFrame, n: String): Long = {
         val tmp = work.resolve(n + ".tmp")
         df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
@@ -384,6 +318,9 @@ class StreamingSpec extends SparkSpec {
         java.nio.file.Files.move(part.toPath, streamDir.resolve(n + ".parquet"))
         df.count()
       }
+      // the maintained state: per-source document and char totals (the
+      // ingest-monitor shape; every source spans both halves, so run-2
+      // totals are only correct if run-1 state was resumed)
       val upserts = scala.collection.mutable.Map[String, (Long, Long)]()
       val sink: (DataFrame, Long) => Unit = (batch, _) =>
         batch.collect().foreach(r =>
@@ -401,21 +338,88 @@ class StreamingSpec extends SparkSpec {
       }
       val n1 = stage(docs.filter(col("doc_id") % 2 === 0), "b1")
       assert(runOnce() == n1, "first session reads the first batch")
+      // the query is now STOPPED (the kill); new data lands while down
       val n2 = stage(docs.filter(col("doc_id") % 2 === 1), "b2")
       val in2 = runOnce()
       assert(in2 == n2,
-        s"RocksDB resume must process ONLY the new batch: read $in2 rows, new batch has $n2")
+        s"resumed session must process ONLY the new batch: read $in2 rows, new batch has $n2 (a full re-read would be ${n1 + n2})")
+      // state survived: run 2 saw half the corpus yet the upserted view
+      // carries FULL totals for every source
       val expect = docs.groupBy(col("source"))
         .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("c"))
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
       assert(upserts.toMap == expect,
-        s"RocksDB-resumed state must merge both batches: got $upserts want $expect")
-      // footprint note for SCALE.md: RocksDB checkpoints carry SST/
-      // changelog state per store, not per-version tiny deltas
+        s"resumed state must merge both batches: got $upserts want $expect")
+      // checkpoint size vs state rows (SCALE.md operational note)
       def du(f: java.io.File): Long =
         if (f.isFile) f.length
         else Option(f.listFiles()).getOrElse(Array.empty).map(du).sum
-      info(s"rocksdb checkpoint bytes=${du(new java.io.File(ckpt))} state_rows=${expect.size}")
+      info(s"checkpoint bytes=${du(new java.io.File(ckpt))} state_rows=${expect.size}")
+    } finally BoundedReplay.deleteStaged(work)
+  }
+
+  test("checkpoint kill/resume under the RocksDB state store provider") {
+    // The HDFS-provider test above proves the restart path for the
+    // default store; the transformWithState family REQUIRES RocksDB
+    // (EventStream.sessionizeTwsOverFiles pins the provider), and
+    // RocksDB's checkpoint layout differs — changelog/SST files plus
+    // zip'd snapshots instead of per-version delta files — so its
+    // resume path must be proven separately: this is the provider the
+    // operational story actually ships on for custom-state pipelines.
+    import org.apache.spark.sql.DataFrame
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val prevProvider = spark.conf.getOption(providerKey)
+    spark.conf.set(providerKey,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try {
+      val work = java.nio.file.Files.createTempDirectory("graft-ckpt-rocks")
+      try {
+        val streamDir = work.resolve("in")
+        java.nio.file.Files.createDirectories(streamDir)
+        val ckpt = work.resolve("ckpt").toString
+        val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+        val schema = docs.schema
+        def stage(df: DataFrame, n: String): Long = {
+          val tmp = work.resolve(n + ".tmp")
+          df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+          val part = new java.io.File(tmp.toString).listFiles()
+            .filter(_.getName.endsWith(".parquet")).head
+          java.nio.file.Files.move(part.toPath, streamDir.resolve(n + ".parquet"))
+          df.count()
+        }
+        val upserts = scala.collection.mutable.Map[String, (Long, Long)]()
+        val sink: (DataFrame, Long) => Unit = (batch, _) =>
+          batch.collect().foreach(r =>
+            upserts(r.getString(0)) = (r.getLong(1), r.getLong(2)))
+        def runOnce(): Long = {
+          val q = spark.readStream.schema(schema).parquet(streamDir.toString)
+            .groupBy(col("source"))
+            .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"))
+            .writeStream.outputMode(OutputMode.Update)
+            .option("checkpointLocation", ckpt)
+            .foreachBatch(sink)
+            .start()
+          try { q.processAllAvailable(); q.recentProgress.map(_.numInputRows).sum }
+          finally q.stop()
+        }
+        val n1 = stage(docs.filter(col("doc_id") % 2 === 0), "b1")
+        assert(runOnce() == n1, "first session reads the first batch")
+        val n2 = stage(docs.filter(col("doc_id") % 2 === 1), "b2")
+        val in2 = runOnce()
+        assert(in2 == n2,
+          s"RocksDB resume must process ONLY the new batch: read $in2 rows, new batch has $n2")
+        val expect = docs.groupBy(col("source"))
+          .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("c"))
+          .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+        assert(upserts.toMap == expect,
+          s"RocksDB-resumed state must merge both batches: got $upserts want $expect")
+        // footprint note for SCALE.md: RocksDB checkpoints carry SST/
+        // changelog state per store, not per-version tiny deltas
+        def du(f: java.io.File): Long =
+          if (f.isFile) f.length
+          else Option(f.listFiles()).getOrElse(Array.empty).map(du).sum
+        info(s"rocksdb checkpoint bytes=${du(new java.io.File(ckpt))} state_rows=${expect.size}")
+      } finally BoundedReplay.deleteStaged(work)
     } finally {
       prevProvider match {
         case Some(p) => spark.conf.set(providerKey, p)
