@@ -153,9 +153,12 @@ object ScaleProbe {
     // the ingest scan, not the state machinery
     named("stream_pii_monitor"),
     own("zorder_write") { (s, d) =>
-      val n = graft.operators.Layout.zorderWriteLineitem(
-        s, d, s"/tmp/graft_zw_probe/${math.abs(d.hashCode)}", 64)
-      s.range(n).toDF("files_written")
+      // the file count is all the row needs: the written copy goes
+      val out = java.nio.file.Files.createTempDirectory("graft-zw-probe")
+      try {
+        val n = graft.operators.Layout.zorderWriteLineitem(s, d, s"$out/li", 64)
+        s.range(n).toDF("files_written")
+      } finally graft.streaming.BoundedReplay.deleteStaged(out)
     },
     // round-6: PQ codebook training is now strided-sample-bounded
     // (TrainSampleCap, the IVF recipe) — the probe watches training

@@ -1,6 +1,8 @@
 package graft.mr
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -20,32 +22,35 @@ import org.apache.spark.sql.functions._
   *
   * Execution collapses the reference's map-per-chunk → materialized
   * double-hash shuffle → reduce → controller re-aggregation pipeline
-  * (manager.go:864-1173) into ONE Spark shuffle on the key: `flatMap` →
-  * `groupByKey(key)` → `mapGroups(reduce)`. That is semantically the
-  * `-aggregate=true` mode — globally correct counts — without the
-  * duplicate-key-across-reducers quirk of the two-level file hash
-  * (SURVEY §1.4.2), which we intentionally do not replicate.
+  * (manager.go:864-1173) into ONE Spark shuffle on the key: one
+  * `mapPartitions` per map task → hash exchange on the key → a sort
+  * within each reduce partition → one reduce per run of equal keys.
+  * That is semantically the `-aggregate=true` mode — globally correct
+  * counts — without the duplicate-key-across-reducers quirk of the
+  * two-level file hash (SURVEY §1.4.2), which we intentionally do not
+  * replicate.
   *
   * Combiners: the reference has none — every `(word,"1")` pair crosses
   * the shuffle (SURVEY §2.4). A registered reducer may declare a
-  * [[Combine]] form, which the default path (`numPartitions = None`)
-  * uses to shrink the map output before the key shuffle:
+  * [[Combine]] form; then the map task folds its pairs into one partial
+  * per key in a hash map ([[combinePairs]], the classic in-mapper
+  * combiner), and one row per distinct key per task crosses the key
+  * exchange, on the default and the `-reducers N` path alike:
   *   - [[Combine.Fold]]: the reduce equals an incremental
-  *     [[ReduceAgg]] aggregator, so the key shuffle carries one partial
-  *     buffer per key per task (wordcount, sum, max).
+  *     [[ReduceAgg]] aggregator; the partial is its buffer, merged after
+  *     the exchange (wordcount, sum, max).
   *   - [[Combine.DistinctValues]]: the reduce depends only on the SET
-  *     of values, so each map task drops the (key, value) pairs it has
-  *     already emitted ([[dropRepeats]], no extra exchange) and the same
-  *     holistic reduce renders the result (posting_list,
-  *     distinct_count). The combiner switches itself off in a task
-  *     whose pairs barely repeat, e.g. one row per unique document.
-  * Every path shuffles once on the key. Reducers without a form
-  * (concat, any caller-registered reduce) and the explicit
-  * `-reducers N` path shuffle every pair.
+  *     of values; the partial is the key's value set, and the same
+  *     holistic reduce runs over the concatenated sets (posting_list,
+  *     distinct_count).
+  * Reducers without a form (concat, any caller-registered reduce)
+  * shuffle every pair.
   *
-  * Scale note: `mapGroups` streams each group's values through an
-  * iterator; the holistic `Seq[String]` signature forces buffering ONE
-  * group in memory (the reference buffered the entire reduce partition,
+  * Scale note: the map-side state is capped at [[CombineCap]] entries
+  * per task (drained and restarted when full), and the reduce side
+  * streams each key's run through an iterator; the holistic
+  * `Seq[String]` signature forces buffering ONE group in memory (the
+  * reference buffered the entire reduce partition,
   * cmd/storage-node/main.go:1318-1321 — strictly worse). A Fold reducer
   * never buffers a group: its state is one constant-size buffer per key.
   */
@@ -53,9 +58,9 @@ object MapReduce {
   type MapFunc = (String, String) => Seq[(String, String)]
   type ReduceFunc = (String, Seq[String]) => String
 
-  /** How the default `runJob` path may combine a reducer's input
-    * map-side. A form is a promise about the holistic reduce it rides
-    * with; MapReduceSpec pins each built-in form against its reduce. */
+  /** How `runJob` may combine a reducer's input map-side. A form is a
+    * promise about the holistic reduce it rides with; MapReduceSpec
+    * pins each built-in form against its reduce. */
   sealed trait Combine
   object Combine {
     /** `reduce(k, vs)` equals `agg` folded over the (k, v) pairs. */
@@ -64,30 +69,96 @@ object MapReduce {
     case object DistinctValues extends Combine
   }
 
-  /** The DistinctValues combiner over one map task's pairs: an
-    * in-mapper combine that drops pairs the task has already emitted,
-    * so no exchange is added. The set of seen pairs is cleared when it
-    * holds `cap` pairs, which bounds its memory. Like Hive's map-side
-    * hash aggregation it turns itself off when it does not pay: if
-    * fewer than a quarter of the first `probe` pairs repeat, the rest of
-    * the task passes through unchecked. A repeat it lets through only
-    * costs shuffle volume, as the reduce sees the set of values anyway. */
-  private[graft] def dropRepeats(pairs: Iterator[(String, String)],
-                                 probe: Int = 1 << 14,
-                                 cap: Int = 1 << 16): Iterator[(String, String)] = {
-    val seen = new java.util.HashSet[(String, String)]()
-    var checked, repeats = 0L
-    var checking = true
-    pairs.filter { kv =>
-      !checking || {
-        if (seen.size >= cap) seen.clear()
-        val fresh = seen.add(kv)
-        checked += 1
-        if (!fresh) repeats += 1
-        if (checked == probe && repeats * 4 < checked) { checking = false; seen.clear() }
-        fresh
+  /** Entries one map task's combiner holds (Fold keys, DistinctValues
+    * values) before it drains: bounds its memory. */
+  private[graft] val CombineCap = 1 << 16
+
+  /** The in-mapper combiner over one map task's pairs: folds each pair
+    * into its key's partial (`add`, starting from `zero()`) in a hash
+    * map, and emits each (key, partial) once. When the partials hold
+    * `cap` entries (`held` counts one partial's), the map is drained
+    * through the iterator and refilled from the rest of the task, so a
+    * key may then be emitted more than once — the reduce side merges
+    * partials anyway. */
+  private[graft] def combinePairs[P](pairs: Iterator[(String, String)], zero: () => P, cap: Int)(
+      add: (P, (String, String)) => P, held: P => Int): Iterator[(String, P)] =
+    new Iterator[(String, P)] {
+      private val partials = new java.util.HashMap[String, P]()
+      private var out = partials.entrySet.iterator
+      def hasNext: Boolean = out.hasNext || { fill(); out.hasNext }
+      def next(): (String, P) = {
+        if (!hasNext) throw new NoSuchElementException("combiner drained")
+        val e = out.next()
+        (e.getKey, e.getValue)
+      }
+      private def fill(): Unit = {
+        partials.clear()
+        var total = 0
+        while (total < cap && pairs.hasNext) {
+          val kv = pairs.next()
+          val old = partials.get(kv._1)
+          val before = if (old == null) 0 else held(old)
+          val now = add(if (old == null) zero() else old, kv)
+          partials.put(kv._1, now)
+          total += held(now) - before
+        }
+        out = partials.entrySet.iterator
       }
     }
+
+  /** One reduce per run of equal keys in a partition sorted by key. */
+  private def reduceRuns[P](rows: Iterator[(String, P)])(
+      f: (String, Iterator[P]) => String): Iterator[(String, String)] = {
+    val in = rows.buffered
+    new Iterator[(String, String)] {
+      def hasNext: Boolean = in.hasNext
+      def next(): (String, String) = {
+        val key = in.head._1
+        val run = new Iterator[P] {
+          def hasNext: Boolean = in.hasNext && in.head._1 == key
+          def next(): P = in.next()._2
+        }
+        val value = f(key, run)
+        run.foreach(_ => ()) // a reduce may stop before the end of its run
+        (key, value)
+      }
+    }
+  }
+
+  /** Letter (L*) and number (Nd, Nl, No) general categories, one bit
+    * per `Character.getType` value. */
+  private val WordTypes = Seq(Character.UPPERCASE_LETTER, Character.LOWERCASE_LETTER,
+    Character.TITLECASE_LETTER, Character.MODIFIER_LETTER, Character.OTHER_LETTER,
+    Character.DECIMAL_DIGIT_NUMBER, Character.LETTER_NUMBER, Character.OTHER_NUMBER)
+    .foldLeft(0)((m, t) => m | 1 << t)
+
+  /** The built-in maps' tokenizer: the maximal runs of letters and
+    * numbers in `s`, exactly `s.split("[^\\p{L}\\p{N}]+").filter(_.nonEmpty)`
+    * (the reference's wordcount.go:32 split) without a regex. It scans
+    * code points: a surrogate pair is one code point, a lone surrogate
+    * separates. Tokens keep their case; the maps lowercase after
+    * splitting, which is not the same as splitting lowercased text
+    * ("İ" lowercases to i + U+0307, a combining mark). */
+  def tokens(s: String): ArraySeq[String] = {
+    val out = Array.newBuilder[String]
+    var start = -1 // first char of the current token, -1 between tokens
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      var width = 1
+      val word =
+        if (c < 0x80) { val l = c | 0x20; (l >= 'a' && l <= 'z') || (c >= '0' && c <= '9') }
+        else {
+          val cp = s.codePointAt(i)
+          width = Character.charCount(cp)
+          (WordTypes >> Character.getType(cp) & 1) != 0
+        }
+      if (word) { if (start < 0) start = i }
+      else if (start >= 0) { out += s.substring(start, i); start = -1 }
+      i += width
+    }
+    if (start >= 0) out += s.substring(start)
+    ArraySeq.unsafeWrapArray(out.result())
   }
 
   /** name → (map, reduce). Replaces the plugin registry
@@ -113,13 +184,10 @@ object MapReduce {
 
   /** Built-in functions: the word-count pair the reference ships
     * (mapreduce/functions/wordcount.go). Tokenize on runs of
-    * non-letter/non-digit, lowercase, emit (token,"1"); reduce = count
-    * of values (wordcount.go:32,41-45). */
+    * non-letter/non-digit ([[tokens]]), lowercase, emit (token,"1");
+    * reduce = count of values (wordcount.go:32,41-45). */
   val builtins: Registry = new Registry()
-    .registerMap("wordcount", { (_, contents) =>
-      contents.split("[^\\p{L}\\p{N}]+").iterator
-        .filter(_.nonEmpty).map(w => (w.toLowerCase, "1")).toSeq
-    })
+    .registerMap("wordcount", (_, contents) => tokens(contents).map(w => (w.toLowerCase, "1")))
     .registerReduce("wordcount", (_, values) => values.size.toString,
       Some(Combine.Fold(ReduceAgg.countAgg)))
     // Second REGISTERED job pair proving the U3 surface generically
@@ -130,17 +198,13 @@ object MapReduce {
     // the sorted distinct posting list. Under `readTextInput` a row is
     // one LINE, so the map only dedups within a line: a token on many
     // lines of one file is emitted once per line. The DistinctValues
-    // combiner removes most of those repeats map-side, before the
-    // shuffle (with one row per unique document there are none, and it
-    // switches off), and the reduce-side distinct makes the result
+    // combiner folds those repeats into one value set per token per
+    // map task, and the reduce-side distinct makes the result
     // independent of how the caller's rows split a document.
     // Holistic-reduce buffering is one posting list — the ABI's
     // documented cost.
-    .registerMap("inverted_index", { (name, contents) =>
-      contents.split("[^\\p{L}\\p{N}]+").iterator
-        .filter(_.nonEmpty).map(_.toLowerCase).toSeq.distinct
-        .map(w => (w, name))
-    })
+    .registerMap("inverted_index", (name, contents) =>
+      tokens(contents).map(_.toLowerCase).distinct.map(w => (w, name)))
     .registerReduce("posting_list", (_, values) => values.distinct.sorted.mkString(","),
       Some(Combine.DistinctValues))
     // Third registered pair (round 12): distinct-count — with the
@@ -168,49 +232,59 @@ object MapReduce {
     * Equivalent of `client mapreduce <in> <out> <map> <reduce>` with
     * `-aggregate=true` (SURVEY §3.1). Returns (key, value) sorted by key
     * — string sort, matching the reference's lexicographic output order
-    * (golden smallt_out.txt: "1, 10, 11, … 2, 20, …"). The default path
-    * applies the reducer's registered [[Combine]] form, if any; the
+    * (golden smallt_out.txt: "1, 10, 11, … 2, 20, …"). The reducer's
+    * registered [[Combine]] form, if any, combines in the map task; the
     * result is the same with or without it.
+    *
+    * `numPartitions` is the reference's `-reducers N`: the key exchange
+    * has exactly N partitions. Without it the exchange is sized by
+    * spark.sql.shuffle.partitions + AQE coalescing — better at scale
+    * than a fixed N.
     */
   def runJob(input: Dataset[(String, String)],
              mapId: String, reduceId: String,
              registry: Registry = builtins,
-             numPartitions: Option[Int] = None): Dataset[(String, String)] = {
+             numPartitions: Option[Int] = None): Dataset[(String, String)] =
+    runJobCapped(input, mapId, reduceId, registry, numPartitions, CombineCap)
+
+  /** [[runJob]] with the combiner's cap as a parameter, so a test can
+    * drain the combiner on small inputs. */
+  private[graft] def runJobCapped(input: Dataset[(String, String)],
+                                  mapId: String, reduceId: String, registry: Registry,
+                                  numPartitions: Option[Int], cap: Int): Dataset[(String, String)] = {
     val spark = input.sparkSession
     import spark.implicits._
     val mf = registry.map(mapId)
     val rf = registry.reduce(reduceId)
-    val mapped = input.flatMap { case (name, contents) => mf(name, contents) }
-    val reduced = numPartitions match {
-      // explicit reducer count (the reference's `-reducers N`): shuffle
-      // once on the key column, then group on that same column so the
-      // HashPartitioning(key, n) satisfies the aggregation's required
-      // distribution — no second exchange. (groupByKey would append its
-      // own key expression and re-shuffle.) No combiner: this path
-      // keeps the reference's every-pair shuffle (a Fold would need its
-      // own exchange below the N-way one).
-      case Some(n) =>
-        mapped.toDF("key", "value")
-          .repartition(n, $"key")
-          .groupBy($"key").agg(collect_list($"value").as("values"))
-          .as[(String, Seq[String])]
-          .map { case (k, vs) => (k, rf(k, vs)) }
-      // default: key shuffle sized by spark.sql.shuffle.partitions +
-      // AQE coalescing — better at scale than a fixed N.
-      case None =>
-        def holistic(kv: Dataset[(String, String)]) = kv.groupByKey(_._1)
-          .mapGroups { (key, it) => (key, rf(key, it.map(_._2).toSeq)) }
-        registry.combine(reduceId) match {
-          // partial aggregate per task, then one buffer per key per
-          // task crosses the shuffle
-          case Some(Combine.Fold(agg)) =>
-            mapped.groupByKey(_._1).agg(agg.toColumn)
-              .toDF("_1", "_2").as[(String, String)]
-          // each map task drops the pairs it already emitted; the
-          // holistic reduce dedups whatever repeats across tasks
-          case Some(Combine.DistinctValues) => holistic(mapped.mapPartitions(dropRepeats(_)))
-          case None => holistic(mapped)
-        }
+    type Rows = Iterator[(String, String)]
+    val pairs = (rows: Rows) => rows.flatMap { case (name, contents) => mf(name, contents) }
+    // shuffle once on the key column, then reduce each key's run of
+    // the sorted partition: (key) partitioning needs no second
+    // exchange, and no AppendColumns re-serializes every row's key
+    // as groupByKey would
+    def byKey[P](rows: Dataset[(String, P)])(
+        reduce: (String, Iterator[P]) => String): Dataset[(String, String)] = {
+      val key = rows("_1")
+      numPartitions.fold(rows.repartition(key))(rows.repartition(_, key))
+        .sortWithinPartitions(key)
+        .mapPartitions(reduceRuns(_)(reduce))
+    }
+    // a Fold ships one aggregator buffer per key per task
+    def fold[B](agg: Aggregator[(String, String), B, String]) = {
+      val buffers = input.mapPartitions((rows: Rows) =>
+        combinePairs(pairs(rows), () => agg.zero, cap)(agg.reduce, _ => 1)
+      )(Encoders.tuple(Encoders.STRING, agg.bufferEncoder))
+      byKey(buffers)((_, bufs) => agg.finish(bufs.reduce(agg.merge)))
+    }
+    val reduced = registry.combine(reduceId) match {
+      case Some(Combine.Fold(agg)) => fold(agg)
+      case Some(Combine.DistinctValues) =>
+        val sets = input.mapPartitions((rows: Rows) =>
+          combinePairs(pairs(rows), () => new java.util.HashSet[String](), cap)(
+            (set, kv) => { set.add(kv._2); set }, _.size)
+            .map { case (k, set) => (k, set.toArray(Array.empty[String]).toSeq) })
+        byKey(sets)((k, runSets) => rf(k, runSets.flatten.toSeq))
+      case None => byKey(input.mapPartitions(pairs))((k, values) => rf(k, values.toSeq))
     }
     reduced
       .orderBy($"_1")
@@ -244,14 +318,15 @@ object MapReduce {
     // raw text sink, not the CSV writer: csv() would quote/escape keys
     // containing quotes or tabs, diverging from the reference's raw
     // `key\tvalue\n` bytes (cmd/storage-node/main.go:1351)
-    val sorted = result.toDF("key", "value").orderBy("key")
-      .select(concat_ws("\t", col("key"), col("value")))
-    // single-file mode must coalesce AFTER the sort: the range
-    // exchange the sort inserts would otherwise re-split the data into
-    // shuffle-partition-many files. Coalescing a range-sorted result
-    // reads its partitions in index order, so global order survives.
-    val out = if (single) sorted.coalesce(1) else sorted
-    out.write.mode(SaveMode.Overwrite).text(path)
+    val rows = result.toDF("key", "value")
+    // single-file mode: one task sorts and writes everything, so a
+    // sort within that one partition is the global sort — no range
+    // sort, whose sampling job re-runs the upstream job. Multi-part
+    // mode range-sorts, so the parts in reducer order are globally
+    // sorted.
+    val sorted = if (single) rows.repartition(1).sortWithinPartitions("key") else rows.orderBy("key")
+    sorted.select(concat_ws("\t", col("key"), col("value")))
+      .write.mode(SaveMode.Overwrite).text(path)
     if (!single) outputKey.foreach(renameToReduceParts(path, _))
   }
 

@@ -11,10 +11,12 @@ import org.apache.spark.sql.expressions.Aggregator
   * whole value list of a group into memory (it buffered the entire
   * reduce partition — cmd/storage-node/main.go:1318-1321). When the
   * reduction is incremental (count, sum, min...), a typed
-  * `Aggregator[IN, BUF, OUT]` lets Spark fold values into a
-  * constant-size buffer with map-side partial aggregation — O(groups)
-  * state instead of O(rows), the difference that matters on a skewed
-  * 100 TB key space. */
+  * `Aggregator[IN, BUF, OUT]` folds values into a constant-size buffer:
+  * `runJob` folds each map task's pairs into one buffer per key
+  * (`reduce`), ships the buffers in `bufferEncoder` form and merges them
+  * after the key exchange (`merge`, `finish`) — O(groups) state instead
+  * of O(rows), the difference that matters on a skewed 100 TB key
+  * space. */
 object ReduceAgg {
 
   /** Fold-based reducer: `(key, value) pairs → per-key fold of value`. */

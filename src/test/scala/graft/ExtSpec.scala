@@ -1149,46 +1149,48 @@ class ExtSpec extends SparkSpec {
   }
 
   test("ANN index artifact: a fresh session reuses the stored index without retraining; stale vintage retrains") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-ann-index").toString + "/idx"
-    // a "new session": the three ANN index memos are empty
-    def resetIndexMemos(): Unit = Seq(Similarity.centroidMemo,
-      Similarity.pqMemo, Similarity.baseCentroidMemo).foreach(_.reset())
-    // first session: trains through the memos and writes the artifact
-    resetIndexMemos()
-    assert(!Similarity.annIndexLoadOrTrain(spark, sf0001, path),
-      "no artifact yet - must train")
-    val trainedCents = Similarity.kmeansCentroids(spark, sf0001)
-    val t0 = Similarity.centroidTrainCount.get()
-    val p0 = Similarity.pqTrainCount.get()
-    // "second session": the memos are gone, the artifact is not
-    resetIndexMemos()
-    assert(Similarity.annIndexLoadOrTrain(spark, sf0001, path),
-      "fresh artifact must be reused")
-    assert(Similarity.centroidTrainCount.get() == t0
-      && Similarity.pqTrainCount.get() == p0,
-      "reuse path must not retrain")
-    // loaded state is bit-identical to trained state
-    assert(Similarity.kmeansCentroids(spark, sf0001) == trainedCents)
-    // ...and the served query equals the memo path's answer
-    val viaIndex = Similarity.annIvfIndexed(spark, sf0001).collect().toSeq
-    val viaMemo = Similarity.annIvf(spark, sf0001).collect().toSeq
-    assert(viaIndex == viaMemo)
-    assert(Similarity.centroidTrainCount.get() == t0)
-    // staleness: an artifact stamped with another vintage must NOT be
-    // served — tamper the fingerprint and watch it retrain + rewrite
-    val tampered = path + "_stale"
-    spark.read.parquet(path)
-      .withColumn("fingerprint", lit(0L))
-      .write.mode("overwrite").parquet(tampered)
-    resetIndexMemos()
-    assert(!Similarity.annIndexLoadOrTrain(spark, sf0001, tampered),
-      "stale artifact must be rejected")
-    assert(Similarity.centroidTrainCount.get() == t0 + 1,
-      "stale path must retrain")
-    // the rewrite healed the artifact: next load reuses it
-    resetIndexMemos()
-    assert(Similarity.annIndexLoadOrTrain(spark, sf0001, tampered))
+    val work = java.nio.file.Files.createTempDirectory("graft-ann-index")
+    try {
+      val path = s"$work/idx"
+      // a "new session": the three ANN index memos are empty
+      def resetIndexMemos(): Unit = Seq(Similarity.centroidMemo,
+        Similarity.pqMemo, Similarity.baseCentroidMemo).foreach(_.reset())
+      // first session: trains through the memos and writes the artifact
+      resetIndexMemos()
+      assert(!Similarity.annIndexLoadOrTrain(spark, sf0001, path),
+        "no artifact yet - must train")
+      val trainedCents = Similarity.kmeansCentroids(spark, sf0001)
+      val t0 = Similarity.centroidTrainCount.get()
+      val p0 = Similarity.pqTrainCount.get()
+      // "second session": the memos are gone, the artifact is not
+      resetIndexMemos()
+      assert(Similarity.annIndexLoadOrTrain(spark, sf0001, path),
+        "fresh artifact must be reused")
+      assert(Similarity.centroidTrainCount.get() == t0
+        && Similarity.pqTrainCount.get() == p0,
+        "reuse path must not retrain")
+      // loaded state is bit-identical to trained state
+      assert(Similarity.kmeansCentroids(spark, sf0001) == trainedCents)
+      // ...and the served query equals the memo path's answer
+      val viaIndex = Similarity.annIvfIndexed(spark, sf0001).collect().toSeq
+      val viaMemo = Similarity.annIvf(spark, sf0001).collect().toSeq
+      assert(viaIndex == viaMemo)
+      assert(Similarity.centroidTrainCount.get() == t0)
+      // staleness: an artifact stamped with another vintage must NOT be
+      // served — tamper the fingerprint and watch it retrain + rewrite
+      val tampered = path + "_stale"
+      spark.read.parquet(path)
+        .withColumn("fingerprint", lit(0L))
+        .write.mode("overwrite").parquet(tampered)
+      resetIndexMemos()
+      assert(!Similarity.annIndexLoadOrTrain(spark, sf0001, tampered),
+        "stale artifact must be rejected")
+      assert(Similarity.centroidTrainCount.get() == t0 + 1,
+        "stale path must retrain")
+      // the rewrite healed the artifact: next load reuses it
+      resetIndexMemos()
+      assert(Similarity.annIndexLoadOrTrain(spark, sf0001, tampered))
+    } finally graft.streaming.BoundedReplay.deleteStaged(work)
   }
 
   test("near-dup edges artifact: consumers serve from the stored graph with zero LSH builds; stale vintage rebuilds") {

@@ -87,16 +87,30 @@ class MapReduceSpec extends SparkSpec {
         "inverted_index" -> "posting_list", "inverted_index" -> "distinct_count"),
       hostileKv -> Seq("identity" -> "sum", "identity" -> "max",
         "identity" -> "posting_list", "identity" -> "distinct_count"))
+    // the default cap, caps small enough to drain the combiner many
+    // times per task, and the `-reducers N` path
+    val variants = Seq((MapReduce.CombineCap, None), (1, None), (2, None), (3, None),
+      (MapReduce.CombineCap, Some(3)), (2, Some(3)))
     for {
       (data, pairs) <- jobs
-      (input, layout) <- Seq(data -> "as read", data.repartition(1) -> "1 partition",
-        data.repartition(13) -> "13 partitions")
       (m, r) <- pairs
     } {
-      val combined = MapReduce.runJob(input, m, r).collect().sorted.toSeq
-      val holistic = MapReduce.runJob(input, m, r, holisticOnly).collect().sorted.toSeq
-      assert(combined.nonEmpty, s"$m/$r ($layout) produced nothing")
-      assert(combined == holistic, s"$m/$r ($layout)")
+      // the reduce over every pair, computed without Spark
+      val local = data.collect().toSeq
+        .flatMap { case (name, contents) => MapReduce.builtins.map(m)(name, contents) }
+        .groupBy(_._1).toSeq
+        .map { case (k, kvs) => (k, MapReduce.builtins.reduce(r)(k, kvs.map(_._2))) }.sorted
+      assert(local.nonEmpty, s"$m/$r produced nothing")
+      assert(MapReduce.runJob(data, m, r, holisticOnly).collect().sorted.toSeq == local,
+        s"$m/$r holistic")
+      for {
+        (input, layout) <- Seq(data -> "as read", data.repartition(1) -> "1 partition",
+          data.repartition(13) -> "13 partitions")
+        (cap, reducers) <- variants
+      } {
+        val combined = MapReduce.runJobCapped(input, m, r, MapReduce.builtins, reducers, cap)
+        assert(combined.collect().sorted.toSeq == local, s"$m/$r ($layout, cap $cap, $reducers)")
+      }
     }
   }
 
@@ -108,20 +122,69 @@ class MapReduceSpec extends SparkSpec {
     assert(r.combine("n").isEmpty)
   }
 
-  test("dropRepeats drops a task's repeated pairs and switches off when they are rare") {
-    import MapReduce.dropRepeats
-    val kv = (i: Int) => (s"k${i % 3}", s"v$i")
-    // mostly repeats: every pair after the first occurrence is dropped
-    val hot = Seq.tabulate(100)(i => kv(i % 5))
-    assert(dropRepeats(hot.iterator, probe = 20).toSeq == hot.distinct)
-    // the set is cleared at `cap`, so a repeat after that passes again
-    assert(dropRepeats(Iterator(kv(1), kv(2), kv(1)), cap = 2).size == 3)
-    // fewer than a quarter of the first `probe` pairs repeat: from
-    // there on every pair passes unchecked
-    val cold = (0 until 20).map(kv) ++ Seq(kv(0), kv(0))
-    assert(dropRepeats(cold.iterator, probe = 20).toSeq == cold)
-    val warm = (0 until 15).map(kv) ++ (0 until 5).map(kv) ++ Seq(kv(0), kv(0))
-    assert(dropRepeats(warm.iterator, probe = 20).toSeq == warm.distinct)
+  test("combinePairs folds a task's pairs per key and drains at the cap") {
+    import MapReduce.combinePairs
+    val kv = Seq(("k", "a"), ("k", "a"), ("k", "b"), ("j", "a"), ("k", "c"), ("j", "a"))
+    def counts(cap: Int) = combinePairs(kv.iterator, () => 0L, cap)((n, _) => n + 1, _ => 1).toSeq
+    def sets(cap: Int) = combinePairs(kv.iterator, () => new java.util.HashSet[String](), cap)(
+      (set, p) => { set.add(p._2); set }, _.size)
+      .map { case (k, set) => (k, set.toArray.map(_.toString).sorted.mkString(",")) }.toSeq
+    // under the cap: one partial per distinct key
+    assert(counts(MapReduce.CombineCap).sorted == Seq(("j", 2L), ("k", 4L)))
+    assert(sets(MapReduce.CombineCap).sorted == Seq(("j", "a"), ("k", "a,b,c")))
+    // a Fold partial holds one entry: two keys fill cap 2, so the map
+    // drains after (k, a) (k, a) (k, b) (j, a) and refills from (k, c)
+    assert(counts(2).sorted == Seq(("j", 1L), ("j", 1L), ("k", 1L), ("k", 3L)))
+    // a DistinctValues partial holds its set: {a, b} and {a} fill cap 3
+    assert(sets(3).sorted == Seq(("j", "a"), ("j", "a"), ("k", "a,b"), ("k", "c")))
+    // cap 1 passes each pair through as its own partial
+    assert(counts(1).size == kv.size)
+    // draining is lazy: the first partial is out after cap pairs are read
+    var read = 0
+    val out = combinePairs(Iterator.tabulate(10) { i => read += 1; (s"k$i", "v") },
+      () => 0L, 4)((n, _) => n + 1, _ => 1)
+    assert(out.hasNext && read == 4)
+    assert(out.size == 10 && read == 10)
+  }
+
+  /** The built-in maps' tokenizer's specification. */
+  private def splitTokens(s: String) = s.split("[^\\p{L}\\p{N}]+").filter(_.nonEmpty).toSeq
+
+  test("tokens equals the regex split on hostile text") {
+    val hostile = Seq(
+      "", " ", "a", "--a--b--", "İstanbul", "i\u0307x", "\u0307", "XII Ⅻ ²³ x²",
+      "\uD835\uDC00\uD835\uDC01 𝐀b", "０１２ ３-４", "ÉCOLE école Straße",
+      "a\uD835b", "a\uDC00b", "\uD835", "\uDC00\uD835", "\uD840\uDC00\uD840\uDC01",
+      "tab\tnew\nline\u00A0nbsp", "x_y.z,w;v", "ʰ ǅ 〇 ٣", "\uD800\uDC00")
+    for (s <- hostile) assert(MapReduce.tokens(s) == splitTokens(s), s)
+    assert(MapReduce.tokens("İstanbul 𝐀 Ⅻ² ０１") == Seq("İstanbul", "𝐀", "Ⅻ²", "０１"))
+    assert(MapReduce.tokens("i\u0307x a\uD835b") == Seq("i", "x", "a", "b"))
+    // split, then lowercase: İ lowercases to i + U+0307, which a split
+    // of the lowercased text would cut (U+0307 is a mark, not a letter)
+    val wc = MapReduce.builtins.map("wordcount")("f", "İstanbul")
+    assert(wc == Seq(("i\u0307stanbul", "1")) && wc.head._1.length == 9)
+  }
+
+  test("tokens equals the regex split on a seeded fuzz of 100k strings") {
+    val rnd = new scala.util.Random(16)
+    val sb = new java.lang.StringBuilder
+    val strings = Iterator.fill(100000) {
+      sb.setLength(0)
+      for (_ <- 0 until rnd.nextInt(24)) rnd.nextInt(10) match {
+        case 0 | 1 | 2 | 3 => sb.append((rnd.nextInt(0x80)).toChar)
+        case 4 => sb.append(' ')
+        case 5 | 6 => // BMP, surrogates excluded
+          val c = 0x80 + rnd.nextInt(0xFFFF - 0x80 - 0x800)
+          sb.append((if (c >= 0xD800) c + 0x800 else c).toChar)
+        case 7 => sb.appendCodePoint(0x10000 + rnd.nextInt(0x100000)) // supplementary
+        case 8 => sb.appendCodePoint(0x1D400 + rnd.nextInt(0x400)) // math letters and digits
+        case _ => sb.append((0xD800 + rnd.nextInt(0x800)).toChar) // a lone surrogate
+      }
+      sb.toString
+    }
+    val mismatches = strings.filter(s => MapReduce.tokens(s) != splitTokens(s)).take(5)
+      .map(_.codePoints.toArray.map(_.toHexString).mkString(" ")).toList
+    assert(mismatches.isEmpty, s"code points of mismatching strings: $mismatches")
   }
 
   test("salted join equals plain join") {

@@ -367,43 +367,80 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("runJob default wordcount combines map-side below its only hash exchange") {
-    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import spark.implicits._
-    val plan = physical(MapReduce.runJob(Seq(("f", "a b c a")).toDS(), "wordcount", "wordcount"))
-    val exchanges = hashExchanges(plan)
-    assert(exchanges.size == 1, s"expected 1 hash exchange in:\n$plan")
-    val partials = exchanges.head.child.collect {
-      case a: BaseAggregateExec
-          if a.aggregateExpressions.nonEmpty && a.aggregateExpressions.forall(_.mode == Partial) => a
-    }
-    assert(partials.nonEmpty, s"expected a partial_ aggregate below the exchange in:\n$plan")
-  }
-
-  test("runJob default posting_list drops repeated pairs map-side and shuffles once") {
+  /** Records each executed hash exchange of `job` wrote, after a run:
+    * AQE's final plan holds the executed exchanges, each inside a query
+    * stage that may sit inside another stage's plan. */
+  private def hashShuffleRecords(job: org.apache.spark.sql.Dataset[_]): Seq[Long] = {
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.adaptive.QueryStageExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def executed(p: org.apache.spark.sql.execution.SparkPlan): Seq[ShuffleExchangeExec] =
+      p.collect { case s: QueryStageExec => s.plan }.flatMap {
+        case e: ShuffleExchangeExec => e +: executed(e.child)
+        case other => executed(other)
+      }
+    executed(physical(job))
+      .filter(_.outputPartitioning.isInstanceOf[HashPartitioning])
+      .map(_.metrics("shuffleRecordsWritten").value)
+  }
+
+  test("runJob default wordcount combines map-side below its only hash exchange") {
+    import org.apache.spark.sql.execution.MapPartitionsExec
     import spark.implicits._
-    // one map task; 5 pairs of which 3 are distinct
+    // one map task; 4 pairs of which 3 keys are distinct
+    val input = spark.createDataset(spark.sparkContext.parallelize(Seq(("f", "a b c a")), 1))
+    val job = MapReduce.runJob(input, "wordcount", "wordcount")
+    val plan = physical(job)
+    val exchanges = hashExchanges(plan)
+    assert(exchanges.size == 1, s"expected 1 hash exchange in:\n$plan")
+    assert(exchanges.head.child.exists(_.isInstanceOf[MapPartitionsExec]),
+      s"expected the combining map task below the exchange in:\n$plan")
+    assert(job.collect().toSeq == Seq(("a", "2"), ("b", "1"), ("c", "1")))
+    val written = hashShuffleRecords(job)
+    assert(written == Seq(3L), s"expected one row per distinct key to cross, not $written")
+  }
+
+  test("runJob default posting_list drops repeated pairs map-side and shuffles once") {
+    import spark.implicits._
+    // one map task; 5 pairs of which 3 are distinct, over 2 keys
     val input = spark.createDataset(spark.sparkContext.parallelize(
       Seq(("k", "a"), ("k", "a"), ("k", "b"), ("j", "a"), ("k", "a")), 1))
     val job = MapReduce.runJob(input, "identity", "posting_list")
     val plan = physical(job)
     assert(hashExchanges(plan).size == 1, s"expected 1 hash exchange in:\n$plan")
     assert(job.collect().toSeq == Seq(("j", "a"), ("k", "a,b")))
-    // after the run, AQE's final plan holds the executed exchanges, each
-    // inside a query stage that may sit inside another stage's plan
-    def executed(p: org.apache.spark.sql.execution.SparkPlan): Seq[ShuffleExchangeExec] =
-      p.collect { case s: QueryStageExec => s.plan }.flatMap {
-        case e: ShuffleExchangeExec => e +: executed(e.child)
-        case other => executed(other)
-      }
-    val written = executed(physical(job))
-      .filter(_.outputPartitioning.isInstanceOf[HashPartitioning])
-      .map(_.metrics("shuffleRecordsWritten").value)
-    assert(written == Seq(3L), s"expected the 3 distinct pairs to cross the key shuffle, not $written")
+    val written = hashShuffleRecords(job)
+    assert(written == Seq(2L), s"expected the 2 key rows to cross the key shuffle, not $written")
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def sparkJobs(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftTestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.GraftTestBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("single-file writeTsv of a wordcount runs 3 Spark jobs, no range sort") {
+    import spark.implicits._
+    val input = spark.createDataset(spark.sparkContext.parallelize(
+      Seq(("f", "b a a c b a"), ("g", "c d a")), 2))
+    val dir = java.nio.file.Files.createTempDirectory("graft-tsv-jobs")
+    // map stage, key-exchange reduce stage, then one task sorts and writes
+    val jobs = try sparkJobs {
+      MapReduce.writeTsv(MapReduce.runJob(input, "wordcount", "wordcount"),
+        s"$dir/out", single = true)
+    } finally graft.streaming.BoundedReplay.deleteStaged(dir)
+    assert(jobs == 3, s"single-file wordcount sink ran $jobs jobs")
   }
 
   test("q1 scan prunes columns and pushes the date filter") {
@@ -469,21 +506,12 @@ class PlanSpec extends SparkSpec {
   }
 
   test("mad_price (build plus noop write, sf0.01) runs at most 12 Spark jobs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sf001 = new java.io.File(new java.io.File(sf0001).getParentFile, "sf0.01").getPath
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftTestBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
+    val jobs = sparkJobs {
       SparkEntry.queries("mad_price")(spark, sf001)
         .write.format("noop").mode("overwrite").save()
-      org.apache.spark.GraftTestBus.drain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get > 0 && jobs.get <= 12, s"mad_price ran ${jobs.get} jobs")
+    }
+    assert(jobs > 0 && jobs <= 12, s"mad_price ran $jobs jobs")
   }
 
   test("inverted_index aggregates postings via the bounded heap, partial-first") {

@@ -21,18 +21,19 @@ class TimeSeriesSpec extends SparkSpec {
       (3L, 0L, 11L, "signup"), (4L, 1 * day, 11L, "purchase"),
       (5L, 0L, 12L, "signup"), // C: no purchase
       (6L, 0L, 13L, "signup"), (7L, 3 * day, 13L, "purchase"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-km-fixture").toString
-    rows.toDF("event_id", "us", "user_id", "event_type")
-      .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
-        col("user_id"), col("event_type"), lit(1.0).as("value"),
-        lit("{}").as("props"))
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val km = operators.EventOps.survivalKm(spark, dir).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getDouble(4)))).toMap
-    assert(km == Map(1L -> ((4L, 2L, 0L, 0.5)), 3L -> ((2L, 1L, 1L, 0.25))),
-      s"unexpected KM table: $km")
+    val dir = java.nio.file.Files.createTempDirectory("graft-km-fixture")
+    try {
+      rows.toDF("event_id", "us", "user_id", "event_type")
+        .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
+          col("user_id"), col("event_type"), lit(1.0).as("value"),
+          lit("{}").as("props"))
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val km = operators.EventOps.survivalKm(spark, dir.toString).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getDouble(4)))).toMap
+      assert(km == Map(1L -> ((4L, 2L, 0L, 0.5)), 3L -> ((2L, 1L, 1L, 0.25))),
+        s"unexpected KM table: $km")
+    } finally graft.streaming.BoundedReplay.deleteStaged(dir)
   }
 
   test("kaplan-meier survival is monotone non-increasing with shrinking risk set") {
